@@ -17,8 +17,11 @@ import org.apache.spark.sql.functions._
   * carry-forward) PIT formulation — linear in input, no entity×features-in-
   * TTL row explosion (see [[PointInTime]]'s scaladoc for the 100 TB
   * rationale). Online lookups broadcast the per-view snapshot, which is
-  * one row per live entity by construction. Multi-view requests chain one
-  * PIT join per view; each is its own single shuffle on that view's keys.
+  * one row per live entity by construction — but the snapshot is a lazy
+  * plan, not stored data (see [[materializeOnline]]), so every lookup
+  * re-runs the latest-per-key argmax over the view's whole history.
+  * Multi-view requests chain one PIT join per view; each is its own
+  * single shuffle on that view's keys.
   */
 final class FeatureStore(
     val registry: Registry.FeatureRegistry,
@@ -65,11 +68,15 @@ final class FeatureStore(
       )
     }
 
-  /** Latest-per-key snapshot for a view, computed once and reused across
-    * lookups ([[OnlineStore.latestSnapshot]]'s map-side-collapsing argmax).
-    * The production equivalent of Feast's materialize-to-Redis.
+  /** Latest-per-key snapshot PLAN for a view
+    * ([[OnlineStore.latestSnapshot]]'s map-side-collapsing argmax). What is
+    * memoized per view is the lazy plan and its file listing, NOT data:
+    * every action on it — each [[getOnlineFeatures]] call — re-runs the
+    * argmax over the view's whole history (a 3-key read scans every
+    * landed row). It stands in for Feast's materialize-to-Redis in
+    * semantics only, not in cost.
     *
-    * The snapshot is FROZEN at first use: the cached plan pins the source's
+    * The snapshot is FROZEN at first use: the memoized plan pins the source's
     * parquet file listing, so appends after materialization stay invisible
     * and a concurrent [[OfflineStore.compactDay]] (which replaces data
     * files) can make lookups on the stale plan fail with

@@ -3232,8 +3232,10 @@ object Layout {
     * array per file per column collected to the driver is ~4 GB at 10^6
     * files / bits=8 / 2 columns; the totals are ≤ 4 KB at ANY file
     * count — ScaleProbe r17b is the measured receipt). Validation rides
-    * one names-sized pass first: basenames (the same payload the
-    * freshness listing itself is) plus per-row null/length flags — a
+    * one pass first, also folded in Spark to FIVE longs (row count,
+    * distinct-basename count, bad-row count, and a (sum, xor) crc32
+    * fingerprint of the basenames) compared against the same fingerprint
+    * of the live listing's names — no basename reaches the driver. A
     * stale manifest, a DUPLICATED file row (which would double-count
     * into the fold and serve a wrong 'exact' answer), a pre-histogram
     * null, or a foreign-bits array length all return None (the consult

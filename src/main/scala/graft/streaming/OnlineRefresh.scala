@@ -3,8 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 import graft.fs.OnlineStore
+import graft.fs.AtomicDir.{recoverSwap, swapDir}
 
 /** Structured-Streaming maintenance of the online store.
   *
@@ -16,8 +17,73 @@ import graft.fs.OnlineStore
   */
 object OnlineRefresh {
 
+  // ------------------------------------------------------------ epoch loop
+  // Every streaming loop below runs on ONE skeleton ([[epochStream]]): a
+  // parquet file-source stream over `inputPath`, a checkpoint, a trigger,
+  // and a `foreachBatch` epoch body — for loops writing into a root that
+  // a planner or compactor may swap, wrapped in that root's writer lease
+  // under the per-checkpoint holder `<loop>:<checkpoint>` (one active
+  // query per checkpoint is the stream's own exclusivity unit; see
+  // [[maintenanceHolder]]). foreachBatch is at-least-once, so each epoch
+  // body is replay-idempotent on its own terms — most by overwriting
+  // their own `batch=<id>` partitions.
+
+  /** Start the file-source stream every loop here runs on: `epoch` gets
+    * each micro-batch and its id, under `lease = Some((root, loop))`'s
+    * writer lease on `root` when given. */
+  private def epochStream(spark: SparkSession, inputPath: String,
+      schema: StructType, checkpoint: String, trigger: Trigger,
+      maxFilesPerTrigger: Option[Int] = None,
+      lease: Option[(String, String)] = None)(
+      epoch: (DataFrame, Long) => Unit): StreamingQuery = {
+    val reader = spark.readStream.schema(schema)
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    reader.parquet(inputPath)
+      .writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        lease match {
+          case Some((root, loop)) =>
+            graft.fs.Layout.withWriterLease(spark, root, s"$loop:$checkpoint")(
+              epoch(batch, batchId))
+          case None => epoch(batch, batchId)
+        }
+      }
+      .start()
+  }
+
+  /** Ready a stream's artifact root before its first epoch: heal a
+    * crashed swap of the root FIRST, then of each sub-dir, then create
+    * the missing sub-dirs through the root's own Hadoop FileSystem. The
+    * order is the point: creating a sub-dir of a half-swapped root (root
+    * gone, `<root>_old` intact) would recreate the root, after which
+    * [[recoverSwap]]'s `!exists(dst)` guard never fires and the committed
+    * epochs in `_old` are lost — the checkpoint prevents re-delivery. */
+  private def prepareRoot(spark: SparkSession, root: String, subs: String*): Unit = {
+    recoverSwap(spark, root)
+    subs.foreach(sub => recoverSwap(spark, s"$root/$sub"))
+    mkdirs(spark, subs.map(sub => s"$root/$sub"): _*)
+  }
+
+  private def mkdirs(spark: SparkSession, dirs: String*): Unit = dirs.foreach { d =>
+    val p = new org.apache.hadoop.fs.Path(d)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p))
+      throw new java.io.IOException(s"mkdirs $p failed")
+  }
+
+  private def pathExists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
   /** Start a stream that maintains `snapshotPath` as the latest-per-key view
-    * of feature rows arriving under `inputPath`. */
+    * of feature rows arriving under `inputPath`. Each micro-batch folds
+    * into the current snapshot and replaces it through the crash-safe
+    * [[swapDir]] (all FS checks on the snapshot path's OWN FileSystem, so
+    * HDFS/S3/GCS roots work); a crash between its renames leaves the
+    * snapshot or `<snapshot>_old` intact, and the next batch restores it
+    * first — never rebuilding the store from just that batch. */
   def start(
       spark: SparkSession,
       inputPath: String,
@@ -27,46 +93,15 @@ object OnlineRefresh {
       keys: Seq[String],
       tsCol: String,
       trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery = {
-    val stream = spark.readStream.schema(schema).parquet(inputPath)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // All FS checks go through the snapshot path's OWN FileSystem — a
-        // java.io.File check would be always-false on HDFS/S3/GCS and each
-        // micro-batch would silently rebuild the store from just that batch.
-        val conf = spark.sparkContext.hadoopConfiguration
-        val dst = new org.apache.hadoop.fs.Path(snapshotPath)
-        val fs = dst.getFileSystem(conf)
-        val oldP = new org.apache.hadoop.fs.Path(snapshotPath + "_old")
-        // Hadoop rename/delete report failure via `false`, not exceptions —
-        // ignoring them could drop the only snapshot copy and still commit
-        // the batch. Throwing makes the streaming engine retry the batch.
-        def must(ok: Boolean, what: String): Unit =
-          if (!ok) throw new java.io.IOException(s"snapshot swap failed: $what")
-        // Recover from a crash mid-swap: dst gone but the set-aside copy
-        // left. A failed recovery rename MUST abort too — continuing would
-        // rebuild the store from just this batch, dropping all other keys.
-        if (!fs.exists(dst) && fs.exists(oldP))
-          must(fs.rename(oldP, dst), s"recovery rename $oldP -> $dst")
-        val current =
-          if (fs.exists(dst)) spark.read.parquet(snapshotPath)
-          else batch.limit(0)
-        val next = OnlineStore.writeOnline(current, batch, keys, tsCol)
-        // Crash-safe swap: write tmp, move old aside, move tmp in, drop old.
-        // A crash between the renames leaves either dst or dst_old intact —
-        // never zero copies (plain delete+rename had that window).
-        val tmp = new org.apache.hadoop.fs.Path(snapshotPath + "_tmp")
-        next.write.mode("overwrite").parquet(tmp.toString)
-        fs.delete(oldP, true)
-        if (fs.exists(dst)) must(fs.rename(dst, oldP), s"rename $dst -> $oldP")
-        must(fs.rename(tmp, dst), s"rename $tmp -> $dst")
-        fs.delete(oldP, true)
-        ()
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    epochStream(spark, inputPath, schema, checkpoint, trigger) { (batch, _) =>
+      recoverSwap(spark, snapshotPath)
+      val current =
+        if (pathExists(spark, snapshotPath)) spark.read.parquet(snapshotPath)
+        else batch.limit(0)
+      val next = OnlineStore.writeOnline(current, batch, keys, tsCol)
+      swapDir(spark, snapshotPath)(tmp => next.write.mode("overwrite").parquet(tmp))
+    }
 
   /** Watermarked hourly aggregate over an event-time stream — the streaming
     * twin of the offline calendar aggregation (late data bounded by the
@@ -229,18 +264,12 @@ object OnlineRefresh {
       tieBreak: Seq[String] = Nil,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.fs.PointInTime
-          .historicalFeatures(batch, featureDf(), keys, eventTs, featureTs,
-            featureCols, ttl, tieBreak)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        ()
-      }
-      .start()
+    epochStream(spark, inputPath, schema, checkpoint, trigger) { (batch, batchId) =>
+      graft.fs.PointInTime
+        .historicalFeatures(batch, featureDf(), keys, eventTs, featureTs,
+          featureCols, ttl, tieBreak)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+    }
 
   /** Streaming INCREMENTAL BM25 index build: documents arrive as a file-
     * source stream, and each micro-batch builds its own partial
@@ -270,39 +299,34 @@ object OnlineRefresh {
       idCol: String = "doc_id",
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.fs.Layout.withWriterLease(spark, outPath,
-          s"bm25IndexStream:$checkpoint") {
-        // ONE tokenize pass per epoch: land postings, then derive the
-        // 1-row stats from the landed artifact + the batch's doc count
-        // ([[graft.ops.TextAnalysis.bm25StatsFromPostings]] — bit-identical
-        // to the second-action plan, minus its full re-tokenization).
-        // The doc count stays a SEPARATE batch.count() (null-text docs
-        // must count, so it cannot come from postings): riding it on the
-        // postings write as an Observation was tried and REVERTED — the
-        // CollectMetrics node sits inside the tokenize→tf pipeline and
-        // breaks its whole-stage-codegen span, costing ~1 s per 4-epoch
-        // build at sf0.1 (Probe18 bm25rc A/B), more than the one
-        // column-pruned count job it saves; and a filtered batch that
-        // collapses to an empty relation folds the node away entirely,
-        // resolving the metrics map EMPTY (the dels-only retract epochs
-        // died on exactly that).
-        val ix = graft.ops.TextAnalysis.bm25Index(batch, textCol, idCol)
-        ix.postings.write.mode("overwrite").parquet(s"$outPath/postings/batch=$batchId")
-        graft.ops.TextAnalysis.bm25StatsFromPostings(
-          spark.read.parquet(s"$outPath/postings/batch=$batchId"), batch.count())
-          .write.mode("overwrite").parquet(s"$outPath/stats/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+  ): StreamingQuery =
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger, Some(outPath -> "bm25IndexStream")) { (batch, batchId) =>
+      landBm25Epoch(spark, batch, outPath, batchId, textCol, idCol)
+    }
+
+  /** One BM25 epoch's partial index, landed as `postings/batch=<id>` +
+    * `stats/batch=<id>` — shared by [[buildBm25IndexStream]] and
+    * [[buildBm25IndexRetractStream]]. ONE tokenize pass: land postings,
+    * then derive the 1-row stats from the landed artifact + the docs'
+    * count ([[graft.ops.TextAnalysis.bm25StatsFromPostings]] —
+    * bit-identical to the second-action plan, minus its full
+    * re-tokenization). The doc count stays a SEPARATE `docs.count()`
+    * (null-text docs must count, so it cannot come from postings): riding
+    * it on the postings write as an Observation was tried and REVERTED —
+    * the CollectMetrics node sits inside the tokenize→tf pipeline and
+    * breaks its whole-stage-codegen span, costing ~1 s per 4-epoch build
+    * at sf0.1 (Probe18 bm25rc A/B), more than the one column-pruned count
+    * job it saves; and a filtered batch that collapses to an empty
+    * relation folds the node away entirely, resolving the metrics map
+    * EMPTY (the dels-only retract epochs died on exactly that). */
+  private def landBm25Epoch(spark: SparkSession, docs: DataFrame,
+      outPath: String, batchId: Long, textCol: String, idCol: String): Unit = {
+    val ix = graft.ops.TextAnalysis.bm25Index(docs, textCol, idCol)
+    ix.postings.write.mode("overwrite").parquet(s"$outPath/postings/batch=$batchId")
+    graft.ops.TextAnalysis.bm25StatsFromPostings(
+      spark.read.parquet(s"$outPath/postings/batch=$batchId"), docs.count())
+      .write.mode("overwrite").parquet(s"$outPath/stats/batch=$batchId")
   }
 
   /** Read the artifact [[buildBm25IndexStream]] accumulates back as ONE
@@ -351,33 +375,28 @@ object OnlineRefresh {
   ): StreamingQuery = {
     recoverSwap(spark, outPath) // root swap: recenterIvfIndex
     landCentroidsIfAbsent(spark, outPath, centroids)
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.fs.Layout.withWriterLease(spark, outPath,
-          s"ivfIndexStream:$checkpoint") {
-        graft.ops.Similarity
-          .ivfAssign(batch, spark.read.parquet(s"$outPath/centroids"), idCol, embCol)
-          .write.mode("overwrite").parquet(s"$outPath/assignments/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger, Some(outPath -> "ivfIndexStream")) { (batch, batchId) =>
+      landIvfEpoch(spark, batch, outPath, batchId, idCol, embCol)
+    }
   }
 
   /** Land the IVF centroid table only when the artifact doesn't have one
     * yet — the stored table is authoritative across stream restarts (the
     * [[buildIvfIndexStream]] / [[recenterIvfIndex]] contract). */
   private def landCentroidsIfAbsent(spark: SparkSession, outPath: String,
-      centroids: org.apache.spark.sql.DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$outPath/centroids")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      centroids: org.apache.spark.sql.DataFrame): Unit =
+    if (!pathExists(spark, s"$outPath/centroids"))
       centroids.write.mode("overwrite").parquet(s"$outPath/centroids")
-  }
+
+  /** One IVF epoch: assign the vectors against the artifact's STORED
+    * centroids (re-read per epoch — [[recenterIvfIndex]] may have replaced
+    * them) into `assignments/batch=<id>`; shared by both IVF builders. */
+  private def landIvfEpoch(spark: SparkSession, vecs: DataFrame,
+      outPath: String, batchId: Long, idCol: String, embCol: String): Unit =
+    graft.ops.Similarity
+      .ivfAssign(vecs, spark.read.parquet(s"$outPath/centroids"), idCol, embCol)
+      .write.mode("overwrite").parquet(s"$outPath/assignments/batch=$batchId")
 
   /** Read the artifact [[buildIvfIndexStream]] accumulates back as ONE
     * served [[graft.ops.Similarity.IvfIndex]]: partition discovery unions
@@ -423,32 +442,21 @@ object OnlineRefresh {
   ): StreamingQuery = {
     recoverSwap(spark, outPath)
     recoverSwap(spark, s"$outPath/codebooks")
-    val p = new org.apache.hadoop.fs.Path(s"$outPath/codebooks")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+    if (!pathExists(spark, s"$outPath/codebooks"))
       // the one-time codebook landing commits via dir swap: a crash
       // mid-write leaves only the tmp dir (swept on the retry), never a
       // partial codebooks dir a bare existence check would adopt as
       // authoritative and silently encode every future batch against
-      graft.fs.AtomicDir.swapDir(spark, s"$outPath/codebooks") { tmp =>
+      swapDir(spark, s"$outPath/codebooks") { tmp =>
         codebooks.write.mode("overwrite").parquet(tmp)
       }
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.fs.Layout.withWriterLease(spark, outPath,
-          s"pqIndexStream:$checkpoint") {
-        graft.ops.Similarity
-          .pqEncodeAgainst(batch, spark.read.parquet(s"$outPath/codebooks"),
-            idCol, embCol)
-          .write.mode("overwrite").parquet(s"$outPath/codes/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger, Some(outPath -> "pqIndexStream")) { (batch, batchId) =>
+      graft.ops.Similarity
+        .pqEncodeAgainst(batch, spark.read.parquet(s"$outPath/codebooks"),
+          idCol, embCol)
+        .write.mode("overwrite").parquet(s"$outPath/codes/batch=$batchId")
+    }
   }
 
   /** Read the artifact [[buildPqIndexStream]] accumulates back as ONE
@@ -626,32 +634,28 @@ object OnlineRefresh {
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
-    // self-heal BEFORE landing centroids/creating subdirs — applyIvfTombstones
-    // root-swaps outPath (the buildBm25IndexRetractStream lesson: writing
-    // into a recreated dst makes recoverSwap's guard unreachable forever)
-    recoverSwap(spark, outPath)
+    // self-heal BEFORE landing centroids — applyIvfTombstones root-swaps
+    // outPath (writing into a recreated dst makes recoverSwap's guard
+    // unreachable forever)
+    prepareRoot(spark, outPath, "dels")
     landCentroidsIfAbsent(spark, outPath, centroids)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$outPath/dels"))
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.fs.Layout.withWriterLease(spark, outPath,
-          s"ivfIndexRetractStream:$checkpoint") {
-        batch.where(col(opCol) === lit("del")).select(col(idCol))
-          .write.mode("overwrite").parquet(s"$outPath/dels/batch=$batchId")
-        graft.ops.Similarity
-          .ivfAssign(batch.where(col(opCol) === lit("ins")).drop(opCol),
-            spark.read.parquet(s"$outPath/centroids"), idCol, embCol)
-          .write.mode("overwrite").parquet(s"$outPath/assignments/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger, Some(outPath -> "ivfIndexRetractStream")) { (batch, batchId) =>
+      landDels(batch, opCol, idCol, outPath, batchId)
+      landIvfEpoch(spark, inserts(batch, opCol), outPath, batchId, idCol, embCol)
+    }
   }
+
+  /** A retract loop's `del` rows, landed as the epoch's append-only
+    * `dels/batch=<id>` tombstone partition (ids only). */
+  private def landDels(batch: DataFrame, opCol: String, idCol: String,
+      outPath: String, batchId: Long): Unit =
+    batch.where(col(opCol) === lit("del")).select(col(idCol))
+      .write.mode("overwrite").parquet(s"$outPath/dels/batch=$batchId")
+
+  /** A retract loop's `ins` rows, without the op column. */
+  private def inserts(batch: DataFrame, opCol: String): DataFrame =
+    batch.where(col(opCol) === lit("ins")).drop(opCol)
 
   /** RE-CENTER the streamed IVF artifact — the ACT the drift monitor
     * ([[graft.ops.Similarity.ivfDriftStats]]) decides: when per-epoch
@@ -705,25 +709,27 @@ object OnlineRefresh {
     val withBatch = fresh.assignments.join(member, Seq(idCol))
     val folded = withBatch.where(col("__b") =!= newest).select(col(idCol), col("cell"))
     val newestPart = withBatch.where(col("__b") === newest).select(col(idCol), col("cell"))
-    val fs = new org.apache.hadoop.fs.Path(outPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val delsPath = new org.apache.hadoop.fs.Path(s"$outPath/dels")
-    val dels = if (fs.exists(delsPath) &&
-        fs.listStatus(delsPath).exists(_.getPath.getName.startsWith("batch=")))
-      Some(spark.read.parquet(s"$outPath/dels")) else None
-    val keepDelsDir = fs.exists(delsPath)
+    val dels = standingDels(spark, outPath)
+    val keepDelsDir = pathExists(spark, s"$outPath/dels")
     swapDir(spark, outPath) { tmp =>
       fresh.centroids.write.mode("overwrite").parquet(s"$tmp/centroids")
       if (epochs.length > 1)
         folded.write.mode("overwrite").parquet(s"$tmp/assignments/batch=$target")
       newestPart.write.mode("overwrite").parquet(s"$tmp/assignments/batch=$newest")
       dels.foreach(_.write.partitionBy("batch").mode("overwrite").parquet(s"$tmp/dels"))
-      if (dels.isEmpty && keepDelsDir)
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$tmp/dels"))
-      ()
+      if (dels.isEmpty && keepDelsDir) mkdirs(spark, s"$tmp/dels")
     }
     true
   }
+
+  /** The artifact's tombstones, or None while `dels` holds no epoch — an
+    * absent dels dir, or one with no `batch=` child yet (the stream
+    * created it and no epoch landed; emptied by a tombstone apply), has
+    * no schema to infer. */
+  private def standingDels(spark: SparkSession, outPath: String): Option[DataFrame] =
+    if (epochIds(spark, s"$outPath/dels").nonEmpty)
+      Some(spark.read.parquet(s"$outPath/dels"))
+    else None
 
   /** Serve the [[buildIvfIndexRetractStream]] artifact: union the
     * assignment shards and anti-join ALL tombstone ids away — the
@@ -733,13 +739,10 @@ object OnlineRefresh {
   def readIvfIndexRetracted(spark: SparkSession, outPath: String,
       idCol: String = "vec_id"): graft.ops.Similarity.IvfIndex = {
     val ix = readIvfIndex(spark, outPath)
-    // after applyIvfTombstones the dels subtree is empty (no batch= child
-    // to infer a schema from) — nothing to subtract
-    if (epochIds(spark, s"$outPath/dels").isEmpty) ix
-    else graft.ops.Similarity.IvfIndex(ix.centroids,
-      ix.assignments.join(
-        broadcast(spark.read.parquet(s"$outPath/dels").select(col(idCol)).distinct()),
-        Seq(idCol), "left_anti"))
+    standingDels(spark, outPath).fold(ix)(dels =>
+      graft.ops.Similarity.IvfIndex(ix.centroids,
+        ix.assignments.join(broadcast(dels.select(col(idCol)).distinct()),
+          Seq(idCol), "left_anti")))
   }
 
   /** PHYSICALLY apply [[buildIvfIndexRetractStream]]'s tombstones and drop
@@ -758,8 +761,8 @@ object OnlineRefresh {
   def applyIvfTombstones(spark: SparkSession, outPath: String,
       idCol: String = "vec_id"): Boolean = {
     recoverSwap(spark, outPath)
-    if (epochIds(spark, s"$outPath/dels").isEmpty) return false
-    val delIds = spark.read.parquet(s"$outPath/dels").select(col(idCol)).distinct()
+    val delIds = standingDels(spark, outPath).getOrElse(return false)
+      .select(col(idCol)).distinct()
     if (delIds.isEmpty) return false
     val asg = spark.read.parquet(s"$outPath/assignments")
     val kept = asg.join(broadcast(delIds), Seq(idCol), "left_anti")
@@ -770,7 +773,7 @@ object OnlineRefresh {
       centroids.write.mode("overwrite").parquet(s"$tmp/centroids")
       // dels subtree recreated empty — the shape readers/the resumed
       // stream expect; a replayed newest epoch re-lands its partition here
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$tmp/dels"))
+      mkdirs(spark, s"$tmp/dels")
     }
     true
   }
@@ -796,20 +799,12 @@ object OnlineRefresh {
       k: Int = 16,
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Sketches.kmvSketch(batch, groupCol, org.apache.spark.sql.functions.col(valueCol), k)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        ()
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger) { (batch, batchId) =>
+      graft.ops.Sketches.kmvSketch(batch, groupCol, col(valueCol), k)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+    }
 
   /** Streaming QUANTILE sketch accumulation — completes the incremental-
     * build quartet (BM25 postings, IVF assignments, KMV cardinality, and
@@ -832,20 +827,12 @@ object OnlineRefresh {
       k: Int = 16,
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Sketches.quantileSketch(batch, groupCol, col(keyCol), col(valueCol), k)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        ()
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger) { (batch, batchId) =>
+      graft.ops.Sketches.quantileSketch(batch, groupCol, col(keyCol), col(valueCol), k)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+    }
 
   /** Merge-fold the accumulated per-batch quantile sketches back into one
     * sketch frame per group (still ≤ k pairs each) — feed to
@@ -896,25 +883,46 @@ object OnlineRefresh {
     // invariance argument depends on it), so its distinct gram set is
     // derived and cached ONCE here — the old per-batch
     // contamination(batch, reference()) re-tokenized and re-distinct'd
-    // the whole reference corpus on every micro-batch
+    // the whole reference corpus on every micro-batch — and released when
+    // the query terminates, however it ends
     val refGrams = graft.ops.Dedup.referenceGrams(reference(), textCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(nf => reader.option("maxFilesPerTrigger", nf))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cont = graft.ops.Dedup.contaminationAgainstGrams(batch, refGrams,
-          textCol, idCol, n)
-        batch
-          .join(cont.where(col("contamination") <= maxContamination)
-            .select(col(idCol), col("contamination")), Seq(idCol))
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        ()
-      }
-      .start()
+    val q = epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger) { (batch, batchId) =>
+      val cont = graft.ops.Dedup.contaminationAgainstGrams(batch, refGrams,
+        textCol, idCol, n)
+      batch
+        .join(cont.where(col("contamination") <= maxContamination)
+          .select(col(idCol), col("contamination")), Seq(idCol))
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+    }
+    unpersistOnTermination(spark, q, refGrams)
+    q
+  }
+
+  /** Release `cached` once `q` terminates: a listener catches the
+    * termination event, and a query that already ended before the
+    * listener could know its id (a short AvailableNow run) is released
+    * right here — `isActive` turns false before the event is posted, so
+    * one of the two always fires. Unpersist is idempotent. */
+  private def unpersistOnTermination(spark: SparkSession, q: StreamingQuery,
+      cached: DataFrame): Unit = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.id == q.id) {
+          cached.unpersist(false)
+          spark.streams.removeListener(this)
+        }
+    }
+    spark.streams.addListener(listener)
+    if (!q.isActive) {
+      cached.unpersist(false)
+      spark.streams.removeListener(listener)
+    }
   }
 
   /** CONTINUOUS Z-ORDERED INGEST — the layout family's streaming loop,
@@ -958,84 +966,68 @@ object OnlineRefresh {
       trigger: Trigger = Trigger.AvailableNow(),
       quantileOn: Option[(String, String)] = None,
       quantileK: Int = 64
-  ): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.fs.Layout.withWriterLease(spark, layoutPath,
-          s"zorderIngestStream:$checkpoint") {
-        val conf = spark.sparkContext.hadoopConfiguration
-        def exists(p: String): Boolean = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(conf).exists(hp)
-        }
-        val mPath = graft.fs.Layout.manifestPath(layoutPath)
-        val vPath = graft.fs.Layout.valueIndexPath(layoutPath, indexCol)
-        recoverSwap(spark, mPath)
-        recoverSwap(spark, vPath)
-        // DATA recovery before anything touches the root (the r14 ADVICE
-        // gap — the other two layout streams already do this): the
-        // companion compactZorderLayout swaps the layout ROOT, and a crash
-        // between its renames leaves only '<layout>_old'; without this
-        // restore, appendZorderedEpoch would recreate the root holding
-        // only the new epoch and the allowGone refreshes would silently
-        // drop every pre-compaction file from the indexes — silent row
-        // loss instead of the loud staleness failure. No-op before the
-        // first epoch (the root does not exist yet).
-        graft.fs.Layout.recoverLayout(spark, layoutPath)
-        if (!exists(graft.fs.Layout.layoutMetaPath(layoutPath)))
-          graft.fs.Layout.buildZorderedEpoch(batch, layoutPath, zCols, bits,
-            numFilesPerBatch, batchId)
-        else
-          graft.fs.Layout.appendZorderedEpoch(batch, layoutPath, batchId,
-            numFilesPerBatch)
-        // the common cadences share ONE scan for both indexes: first epoch
-        // = combined full build, every later epoch = combined incremental
-        // refresh; the mixed states (one index present, the other not —
-        // only reachable by hand-deleting a sidecar) keep the individual
-        // paths
-        (exists(mPath), exists(vPath)) match {
-          case (false, false) =>
-            graft.fs.Layout.writeLayoutIndexes(spark, layoutPath, zCols,
-              indexCol, buckets)
-          case (true, true) =>
-            graft.fs.Layout.refreshLayoutIndexes(spark, layoutPath, zCols,
-              indexCol, buckets, allowGone = true)
-          case (hasM, _) =>
-            if (!hasM)
-              graft.fs.Layout.writeManifest(spark, layoutPath, zCols)
-            else
-              graft.fs.Layout.refreshManifest(spark, layoutPath, zCols,
-                allowGone = true)
-            if (!exists(vPath))
-              graft.fs.Layout.writeValueIndex(spark, layoutPath, indexCol,
-                buckets)
-            else
-              graft.fs.Layout.refreshValueIndex(spark, layoutPath, indexCol,
-                buckets, allowGone = true)
-        }
-        // the OPTIONAL third index family: per-file quantile samples —
-        // same epoch commit unit, same incremental refresh economics,
-        // so the quantile pushdown serves between epochs like the others
-        quantileOn.foreach { case (v, key) =>
-          val qp = graft.fs.Layout.quantileIndexPath(layoutPath, v, key)
-          recoverSwap(spark, qp)
-          if (!exists(qp))
-            graft.fs.Layout.writeQuantileIndex(spark, layoutPath, v, key,
-              quantileK)
+  ): StreamingQuery =
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger, Some(layoutPath -> "zorderIngestStream")) { (batch, batchId) =>
+      val mPath = graft.fs.Layout.manifestPath(layoutPath)
+      val vPath = graft.fs.Layout.valueIndexPath(layoutPath, indexCol)
+      recoverSwap(spark, mPath)
+      recoverSwap(spark, vPath)
+      // DATA recovery before anything touches the root (the r14 ADVICE
+      // gap — the other two layout streams already do this): the
+      // companion compactZorderLayout swaps the layout ROOT, and a crash
+      // between its renames leaves only '<layout>_old'; without this
+      // restore, appendZorderedEpoch would recreate the root holding
+      // only the new epoch and the allowGone refreshes would silently
+      // drop every pre-compaction file from the indexes — silent row
+      // loss instead of the loud staleness failure. No-op before the
+      // first epoch (the root does not exist yet).
+      graft.fs.Layout.recoverLayout(spark, layoutPath)
+      if (!pathExists(spark, graft.fs.Layout.layoutMetaPath(layoutPath)))
+        graft.fs.Layout.buildZorderedEpoch(batch, layoutPath, zCols, bits,
+          numFilesPerBatch, batchId)
+      else
+        graft.fs.Layout.appendZorderedEpoch(batch, layoutPath, batchId,
+          numFilesPerBatch)
+      // the common cadences share ONE scan for both indexes: first epoch
+      // = combined full build, every later epoch = combined incremental
+      // refresh; the mixed states (one index present, the other not —
+      // only reachable by hand-deleting a sidecar) keep the individual
+      // paths
+      (pathExists(spark, mPath), pathExists(spark, vPath)) match {
+        case (false, false) =>
+          graft.fs.Layout.writeLayoutIndexes(spark, layoutPath, zCols,
+            indexCol, buckets)
+        case (true, true) =>
+          graft.fs.Layout.refreshLayoutIndexes(spark, layoutPath, zCols,
+            indexCol, buckets, allowGone = true)
+        case (hasM, _) =>
+          if (!hasM)
+            graft.fs.Layout.writeManifest(spark, layoutPath, zCols)
           else
-            graft.fs.Layout.refreshQuantileIndex(spark, layoutPath, v, key,
-              quantileK, allowGone = true)
-        }
-        }
-        ()
+            graft.fs.Layout.refreshManifest(spark, layoutPath, zCols,
+              allowGone = true)
+          if (!pathExists(spark, vPath))
+            graft.fs.Layout.writeValueIndex(spark, layoutPath, indexCol,
+              buckets)
+          else
+            graft.fs.Layout.refreshValueIndex(spark, layoutPath, indexCol,
+              buckets, allowGone = true)
       }
-      .start()
-  }
+      // the OPTIONAL third index family: per-file quantile samples —
+      // same epoch commit unit, same incremental refresh economics,
+      // so the quantile pushdown serves between epochs like the others
+      quantileOn.foreach { case (v, key) =>
+        val qp = graft.fs.Layout.quantileIndexPath(layoutPath, v, key)
+        recoverSwap(spark, qp)
+        if (!pathExists(spark, qp))
+          graft.fs.Layout.writeQuantileIndex(spark, layoutPath, v, key,
+            quantileK)
+        else
+          graft.fs.Layout.refreshQuantileIndex(spark, layoutPath, v, key,
+            quantileK, allowGone = true)
+      }
+    }
 
   /** Fold the layout's committed epochs back to the built file count —
     * [[compactBatchArtifact]] with a z-reclustering fold (frozen-meta
@@ -1058,33 +1050,61 @@ object OnlineRefresh {
     // Layout mutator), so the planner records the rewrite commit itself
     graft.fs.OptimisticCommit.rewriteScope(spark, layoutPath,
       "compactZorderLayout") {
+      val did = foldZorderEpochs(spark, layoutPath, numFiles)
+      if (did) rewriteLayoutIndexes(spark, layoutPath, zCols, indexCol, buckets)
+      did
+    }
+  }
+
+  /** The epoch fold of [[compactZorderLayout]] and [[maintainLayout]],
+    * without lease or commit scope (the callers hold both). The fold's
+    * range exchange SAMPLES its child (a second execution of the
+    * scan+keying lineage) before the shuffle pass — so the fold source is
+    * persisted for the write's duration and both passes read the cache
+    * (the [[graft.fs.Layout.withRangeClustered]] rationale; here the write
+    * happens inside compactBatchArtifact, so the cache handle outlives
+    * the lambda and releases right after the call). */
+  private def foldZorderEpochs(spark: SparkSession, layoutPath: String,
+      numFiles: Int): Boolean = {
     val (cols, bits, bounds, sbounds) =
       graft.fs.Layout.readLayoutMetaTyped(spark, layoutPath)
-    // the fold's range exchange SAMPLES its child (a second execution of
-    // the scan+keying lineage) before the shuffle pass — persist the fold
-    // source for the write's duration so both passes read the cache (the
-    // [[graft.fs.Layout.withRangeClustered]] rationale; here the write
-    // happens inside compactBatchArtifact, so the cache handle outlives
-    // the lambda and releases right after the call)
     var foldSrc: Option[DataFrame] = None
-    val did =
-      try compactBatchArtifact(spark, layoutPath, { df =>
-        val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        foldSrc = Some(cached)
-        graft.fs.Layout.zorderKeyWithBoundsTyped(cached, cols, bits, bounds, sbounds)
-          .repartitionByRange(numFiles, col("zkey"))
-          .sortWithinPartitions(col("zkey"))
-          .drop(graft.fs.Layout.zorderWorkCols(cols.size): _*)
-      })
-      finally foldSrc.foreach(_.unpersist(false))
-    if (did) {
-      // full index rewrites after the fold — ONE table scan for both
-      graft.fs.Layout.writeLayoutIndexes(spark, layoutPath, zCols, indexCol,
-        buckets)
-      rebuildStandingQuantileIndexes(spark, layoutPath)
-    }
-    did
-    }
+    try compactBatchArtifact(spark, layoutPath, { df =>
+      val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      foldSrc = Some(cached)
+      graft.fs.Layout.zorderKeyWithBoundsTyped(cached, cols, bits, bounds, sbounds)
+        .repartitionByRange(numFiles, col("zkey"))
+        .sortWithinPartitions(col("zkey"))
+        .drop(graft.fs.Layout.zorderWorkCols(cols.size): _*)
+    })
+    finally foldSrc.foreach(_.unpersist(false))
+  }
+
+  /** FULL index rewrite after every file changed (recluster / full fold /
+    * flat compact): both skipping indexes from ONE table scan, then every
+    * standing quantile index at its build's persisted k. */
+  private def rewriteLayoutIndexes(spark: SparkSession, layoutPath: String,
+      zCols: Seq[String], indexCol: String, buckets: Int): Unit = {
+    graft.fs.Layout.writeLayoutIndexes(spark, layoutPath, zCols, indexCol,
+      buckets)
+    graft.fs.Layout.standingQuantileIndexes(spark, layoutPath)
+      .foreach { case (v, key, k) =>
+        graft.fs.Layout.writeQuantileIndex(spark, layoutPath, v, key, k)
+      }
+  }
+
+  /** INCREMENTAL index catch-up after a partial rewrite (the tier
+    * cadence): both skipping indexes and every standing quantile index
+    * refresh with `allowGone = true` — folded files drop, new files index. */
+  private def catchUpLayoutIndexes(spark: SparkSession, layoutPath: String,
+      zCols: Seq[String], indexCol: String, buckets: Int): Unit = {
+    graft.fs.Layout.refreshLayoutIndexes(spark, layoutPath, zCols, indexCol,
+      buckets, allowGone = true)
+    graft.fs.Layout.standingQuantileIndexes(spark, layoutPath)
+      .foreach { case (v, key, k) =>
+        graft.fs.Layout.refreshQuantileIndex(spark, layoutPath, v, key, k,
+          allowGone = true)
+      }
   }
 
   /** SIZE-TIERED fold between stream runs — the INCREMENTAL maintenance
@@ -1110,11 +1130,8 @@ object OnlineRefresh {
       maintenanceHolder("tierZorderLayout")) {
     val folded = graft.fs.Layout.compactEpochsTiered(spark, layoutPath,
       maxBytes, numFiles)
-    if (folded.nonEmpty) {
-      graft.fs.Layout.refreshLayoutIndexes(spark, layoutPath, zCols,
-        indexCol, buckets, allowGone = true)
-      refreshStandingQuantileIndexes(spark, layoutPath)
-    }
+    if (folded.nonEmpty)
+      catchUpLayoutIndexes(spark, layoutPath, zCols, indexCol, buckets)
     folded
   }
 
@@ -1144,26 +1161,6 @@ object OnlineRefresh {
     s"$op:$pidHost:${java.util.UUID.randomUUID}"
   }
 
-  /** Every standing quantile index catches up incrementally (the tier /
-    * stream cadence) — discovery by the path convention, each at its
-    * build's persisted k. */
-  private def refreshStandingQuantileIndexes(spark: SparkSession,
-      layoutPath: String): Unit =
-    graft.fs.Layout.standingQuantileIndexes(spark, layoutPath)
-      .foreach { case (v, key, k) =>
-        graft.fs.Layout.refreshQuantileIndex(spark, layoutPath, v, key, k,
-          allowGone = true)
-      }
-
-  /** Every standing quantile index rebuilds whole (the every-file-changed
-    * cadence: recluster / full fold / flat compact). */
-  private def rebuildStandingQuantileIndexes(spark: SparkSession,
-      layoutPath: String): Unit =
-    graft.fs.Layout.standingQuantileIndexes(spark, layoutPath)
-      .foreach { case (v, key, k) =>
-        graft.fs.Layout.writeQuantileIndex(spark, layoutPath, v, key, k)
-      }
-
   /** RECLUSTER the layout between stream runs — the drift-loop closer
     * ([[graft.fs.Layout.layoutDrift]] is the trigger,
     * [[graft.fs.Layout.reclusterLayout]] the rewrite, this the bundled
@@ -1187,13 +1184,20 @@ object OnlineRefresh {
     // reclusterLayout's own scope nests into this one)
     graft.fs.OptimisticCommit.rewriteScope(spark, layoutPath,
       "reclusterZorderLayout") {
+      reclusterWithIndexes(spark, layoutPath, zCols, indexCol, numFiles,
+        buckets, sampleBy)
+    }
+  }
+
+  /** Recluster + full index rewrite, without lease or commit scope — the
+    * body of [[reclusterZorderLayout]] and [[maintainLayout]]'s drift arm. */
+  private def reclusterWithIndexes(spark: SparkSession, layoutPath: String,
+      zCols: Seq[String], indexCol: String, numFiles: Int, buckets: Int,
+      sampleBy: Option[(String, Int)]): Seq[Seq[Double]] = {
     val bounds = graft.fs.Layout.reclusterLayout(spark, layoutPath, numFiles,
       sampleBy)
-    graft.fs.Layout.writeLayoutIndexes(spark, layoutPath, zCols, indexCol,
-      buckets)
-    rebuildStandingQuantileIndexes(spark, layoutPath)
+    rewriteLayoutIndexes(spark, layoutPath, zCols, indexCol, buckets)
     bounds
-    }
   }
 
   /** TAKEDOWN FEED for the Z-ordered layout — the streaming twin of
@@ -1221,40 +1225,34 @@ object OnlineRefresh {
       buckets: Int = 1 << 16,
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.fs.Layout.withWriterLease(spark, layoutPath,
-          s"zorderDeleteStream:$checkpoint") {
-        // index swaps may have crashed mid-epoch; restore before the
-        // consult inside deleteByKeys reads them
-        recoverSwap(spark, graft.fs.Layout.manifestPath(layoutPath))
-        recoverSwap(spark, graft.fs.Layout.valueIndexPath(layoutPath, keyCol))
-        // DATA recovery strictly BEFORE the head refresh: a crash inside
-        // a partition swap leaves a set-aside the refresh would read as
-        // gone files — refreshing first would drop the partition from
-        // the indexes and serve without its surviving rows
-        graft.fs.Layout.recoverLayout(spark, layoutPath)
-        // HEAD repair (no-op when fresh): a crash between a previous
-        // epoch's rewrites and its closing refresh leaves stale indexes,
-        // and the consult inside deleteByKeys refuses stale — the
-        // replayed batch must restore freshness before it can route
-        graft.fs.Layout.refreshLayoutIndexes(spark, layoutPath, zCols,
-          keyCol, buckets, allowGone = true)
-        graft.fs.Layout.deleteByKeys(spark, layoutPath, batch, keyCol, buckets)
-        // the epoch's commit unit: indexes catch up to the rewrites —
-        // ONE shared scan of the changed files for both indexes
-        graft.fs.Layout.refreshLayoutIndexes(spark, layoutPath, zCols,
-          keyCol, buckets, allowGone = true)
-        }
-        ()
-      }
-      .start()
+  ): StreamingQuery =
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger, Some(layoutPath -> "zorderDeleteStream")) { (batch, _) =>
+      healLayoutHead(spark, layoutPath, zCols, keyCol, buckets)
+      graft.fs.Layout.deleteByKeys(spark, layoutPath, batch, keyCol, buckets)
+      // the epoch's commit unit: indexes catch up to the rewrites —
+      // ONE shared scan of the changed files for both indexes
+      graft.fs.Layout.refreshLayoutIndexes(spark, layoutPath, zCols,
+        keyCol, buckets, allowGone = true)
+    }
+
+  /** The self-healing head of the physical takedown and CDC loops, run
+    * before the epoch's mutator: index swaps may have crashed mid-epoch,
+    * so restore them before the consult inside the mutator reads them;
+    * DATA recovery strictly BEFORE the head refresh (a crash inside a
+    * partition swap leaves a set-aside the refresh would read as gone
+    * files — refreshing first would drop the partition from the indexes
+    * and serve without its surviving rows); then the HEAD repair (no-op
+    * when fresh): a crash between a previous epoch's rewrites and its
+    * closing refresh leaves stale indexes, the consult refuses stale,
+    * and the replayed batch must restore freshness before it can route. */
+  private def healLayoutHead(spark: SparkSession, layoutPath: String,
+      zCols: Seq[String], keyCol: String, buckets: Int): Unit = {
+    recoverSwap(spark, graft.fs.Layout.manifestPath(layoutPath))
+    recoverSwap(spark, graft.fs.Layout.valueIndexPath(layoutPath, keyCol))
+    graft.fs.Layout.recoverLayout(spark, layoutPath)
+    graft.fs.Layout.refreshLayoutIndexes(spark, layoutPath, zCols,
+      keyCol, buckets, allowGone = true)
   }
 
   /** LAYOUT MAINTENANCE — ONE call closing the whole monitor→decide→act
@@ -1325,22 +1323,15 @@ object OnlineRefresh {
     val filesBefore = fileCount()
     report += ("files_before" -> filesBefore.toDouble)
     if (maxTv >= reclusterAt) {
-      graft.fs.Layout.reclusterLayout(spark, layoutPath, numFiles, sampleBy)
-      graft.fs.Layout.writeLayoutIndexes(spark, layoutPath, zCols, keyCol,
-        buckets)
-      rebuildStandingQuantileIndexes(spark, layoutPath)
+      reclusterWithIndexes(spark, layoutPath, zCols, keyCol, numFiles,
+        buckets, sampleBy)
       report += ("reclustered" -> 1.0)
       graft.fs.Layout.layoutDrift(spark, layoutPath, sampleBy).collect()
         .foreach(r =>
           report += (s"drift_after_${r.getString(1)}" -> r.getDouble(3)))
       report += ("files_after" -> fileCount().toDouble)
     } else if (filesBefore > maxFiles) {
-      val hasEpochs = {
-        val rp = new org.apache.hadoop.fs.Path(layoutPath)
-        val hfs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        hfs.listStatus(rp).exists(st =>
-          st.isDirectory && st.getPath.getName.startsWith("batch="))
-      }
+      val hasEpochs = epochIds(spark, layoutPath).nonEmpty
       // with a tier threshold configured, the epoch shape tries the
       // INCREMENTAL fold first — cost ∝ the small tail, index catch-up
       // incremental; the full fold is the fallback when nothing small
@@ -1352,37 +1343,15 @@ object OnlineRefresh {
           .getOrElse(Nil)
         else Nil
       if (tiered.nonEmpty) {
-        graft.fs.Layout.refreshLayoutIndexes(spark, layoutPath, zCols,
-          keyCol, buckets, allowGone = true)
-        refreshStandingQuantileIndexes(spark, layoutPath)
+        catchUpLayoutIndexes(spark, layoutPath, zCols, keyCol, buckets)
         report += ("tiered" -> tiered.size.toDouble)
         report += ("files_after" -> fileCount().toDouble)
       } else {
         val did =
-          if (hasEpochs) {
-            val (cols, bits, bounds, sbounds) =
-              graft.fs.Layout.readLayoutMetaTyped(spark, layoutPath)
-            // persist-through-the-fold: see compactZorderLayout — one
-            // scan+keying execution instead of two (range-exchange sampling)
-            var foldSrc: Option[DataFrame] = None
-            try compactBatchArtifact(spark, layoutPath, { df =>
-              val cached = df.persist(
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              foldSrc = Some(cached)
-              graft.fs.Layout.zorderKeyWithBoundsTyped(cached, cols, bits,
-                bounds, sbounds)
-                .repartitionByRange(numFiles, col("zkey"))
-                .sortWithinPartitions(col("zkey"))
-                .drop(graft.fs.Layout.zorderWorkCols(cols.size): _*)
-            })
-            finally foldSrc.foreach(_.unpersist(false))
-          } else {
-            graft.fs.Layout.compactLayout(spark, layoutPath, numFiles); true
-          }
+          if (hasEpochs) foldZorderEpochs(spark, layoutPath, numFiles)
+          else { graft.fs.Layout.compactLayout(spark, layoutPath, numFiles); true }
         if (did) {
-          graft.fs.Layout.writeLayoutIndexes(spark, layoutPath, zCols, keyCol,
-            buckets)
-          rebuildStandingQuantileIndexes(spark, layoutPath)
+          rewriteLayoutIndexes(spark, layoutPath, zCols, keyCol, buckets)
           report += ("compacted" -> 1.0)
           report += ("files_after" -> fileCount().toDouble)
         }
@@ -1496,26 +1465,15 @@ object OnlineRefresh {
       keyCol: String,
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.fs.Layout.withWriterLease(spark, layoutPath,
-          s"zorderDeleteMorStream:$checkpoint") {
-          // heal a crashed companion maintenance swap before touching
-          // the table (the ingest-loop lesson); the sidecar's own swap
-          // recovery runs inside deleteLogical
-          graft.fs.Layout.recoverLayout(spark, layoutPath)
-          graft.fs.Layout.deleteLogical(spark, layoutPath, batch, keyCol)
-        }
-        ()
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger, Some(layoutPath -> "zorderDeleteMorStream")) { (batch, _) =>
+      // heal a crashed companion maintenance swap before touching
+      // the table (the ingest-loop lesson); the sidecar's own swap
+      // recovery runs inside deleteLogical
+      graft.fs.Layout.recoverLayout(spark, layoutPath)
+      graft.fs.Layout.deleteLogical(spark, layoutPath, batch, keyCol)
+    }
 
   /** CDC APPLY, MERGE-ON-READ — the O(feed) twin of
     * [[zorderUpsertStream]]: each key-distinct micro-batch STAGES its
@@ -1543,23 +1501,12 @@ object OnlineRefresh {
       keyCol: String,
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.fs.Layout.withWriterLease(spark, layoutPath,
-          s"zorderUpsertMorStream:$checkpoint") {
-          graft.fs.Layout.recoverLayout(spark, layoutPath)
-          graft.fs.Layout.upsertLogical(spark, layoutPath, batch, keyCol)
-        }
-        ()
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger, Some(layoutPath -> "zorderUpsertMorStream")) { (batch, _) =>
+      graft.fs.Layout.recoverLayout(spark, layoutPath)
+      graft.fs.Layout.upsertLogical(spark, layoutPath, batch, keyCol)
+    }
 
   /** CDC APPLY for the Z-ordered layout — the streaming MERGE loop
     * completing the layout's streaming matrix (ingest, takedown, now
@@ -1591,33 +1538,16 @@ object OnlineRefresh {
       cdcEpochBase: Long = 1L << 40,
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.fs.Layout.withWriterLease(spark, layoutPath,
-          s"zorderUpsertStream:$checkpoint") {
-        recoverSwap(spark, graft.fs.Layout.manifestPath(layoutPath))
-        recoverSwap(spark, graft.fs.Layout.valueIndexPath(layoutPath, keyCol))
-        // data recovery BEFORE the head refresh (see zorderDeleteStream —
-        // a refresh over a set-aside partition would drop its files)
-        graft.fs.Layout.recoverLayout(spark, layoutPath)
-        graft.fs.Layout.refreshLayoutIndexes(spark, layoutPath, zCols,
-          keyCol, buckets, allowGone = true)
-        graft.fs.Layout.upsertByKey(spark, layoutPath, batch, keyCol, buckets,
-          numFilesPerBatch, batchId = Some(cdcEpochBase + batchId))
-        // commit unit: ONE shared scan of the changed files for both indexes
-        graft.fs.Layout.refreshLayoutIndexes(spark, layoutPath, zCols,
-          keyCol, buckets, allowGone = true)
-        }
-        ()
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger, Some(layoutPath -> "zorderUpsertStream")) { (batch, batchId) =>
+      healLayoutHead(spark, layoutPath, zCols, keyCol, buckets)
+      graft.fs.Layout.upsertByKey(spark, layoutPath, batch, keyCol, buckets,
+        numFilesPerBatch, batchId = Some(cdcEpochBase + batchId))
+      // commit unit: ONE shared scan of the changed files for both indexes
+      graft.fs.Layout.refreshLayoutIndexes(spark, layoutPath, zCols,
+        keyCol, buckets, allowGone = true)
+    }
 
   /** The ingestion loop RUN AS A STREAM: each micro-batch of newly-landed
     * documents is cleaned against the standing corpus of all EARLIER
@@ -1652,23 +1582,16 @@ object OnlineRefresh {
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$outPath/docs"))
-    val standingSchema = schema.add("batch", org.apache.spark.sql.types.LongType)
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val standing = spark.read.schema(standingSchema).parquet(s"$outPath/docs")
-          .where(col("batch") < lit(batchId)).drop("batch")
-        graft.ops.Dedup
-          .dedupAgainst(standing, batch, textCol, idCol, nBlocks, maxBlockFreq)
-          .write.mode("overwrite").parquet(s"$outPath/docs/batch=$batchId")
-        ()
-      }
-      .start()
+    prepareRoot(spark, outPath, "docs")
+    val standingSchema = schema.add("batch", LongType)
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger) { (batch, batchId) =>
+      val standing = spark.read.schema(standingSchema).parquet(s"$outPath/docs")
+        .where(col("batch") < lit(batchId)).drop("batch")
+      graft.ops.Dedup
+        .dedupAgainst(standing, batch, textCol, idCol, nBlocks, maxBlockFreq)
+        .write.mode("overwrite").parquet(s"$outPath/docs/batch=$batchId")
+    }
   }
 
   /** INGESTION-TIME SPAN COVERAGE as a stream — the span family's
@@ -1703,28 +1626,19 @@ object OnlineRefresh {
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$outPath/bank"))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$outPath/coverage"))
-    val bankSchema = new StructType()
-      .add("span_fp", org.apache.spark.sql.types.LongType)
-      .add("batch", org.apache.spark.sql.types.LongType)
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bank = spark.read.schema(bankSchema).parquet(s"$outPath/bank")
-          .where(col("batch") < lit(batchId)).drop("batch")
-        graft.ops.Dedup
-          .duplicateSpansAgainst(batch, bank, width, textCol, idCol)
-          .write.mode("overwrite").parquet(s"$outPath/coverage/batch=$batchId")
-        graft.ops.Dedup.spanFingerprintBank(batch, width, textCol, idCol)
-          .write.mode("overwrite").parquet(s"$outPath/bank/batch=$batchId")
-        ()
-      }
-      .start()
+    // the bank's own swap (compactSpanBank / retractSpanBank) heals first
+    prepareRoot(spark, outPath, "bank", "coverage")
+    val bankSchema = new StructType().add("span_fp", LongType).add("batch", LongType)
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger) { (batch, batchId) =>
+      val bank = spark.read.schema(bankSchema).parquet(s"$outPath/bank")
+        .where(col("batch") < lit(batchId)).drop("batch")
+      graft.ops.Dedup
+        .duplicateSpansAgainst(batch, bank, width, textCol, idCol)
+        .write.mode("overwrite").parquet(s"$outPath/coverage/batch=$batchId")
+      graft.ops.Dedup.spanFingerprintBank(batch, width, textCol, idCol)
+        .write.mode("overwrite").parquet(s"$outPath/bank/batch=$batchId")
+    }
   }
 
   /** The accumulated span-fingerprint bank as ONE distinct-fps frame —
@@ -1802,24 +1716,14 @@ object OnlineRefresh {
   // compaction end-to-end, q_bm25_topk_compacted pins compacted ≡
   // uncompacted serve output under the oracle.
 
-  /** Self-heal a directory whose last swap crashed mid-rename: dst missing
-    * but the set-aside `_old` copy intact ⇒ restore it. PUBLIC entry points
-    * that read or rewrite a swapped artifact dir call this FIRST — the
-    * recovery branch inside [[swapDir]] alone is unreachable when the
-    * caller (e.g. [[compactBatchArtifact]]'s `spark.read.parquet(dir)`, or
-    * any read* helper) touches the missing dst before the swap runs. */
-  private[streaming] def recoverSwap(spark: SparkSession, dirPath: String): Unit =
-    graft.fs.AtomicDir.recoverSwap(spark, dirPath)
-
-  /** Crash-safe directory swap ([[graft.fs.AtomicDir.swapDir]] — the
-    * [[start]] snapshot recipe, shared with the layout-index refreshes):
-    * write the replacement via `write(tmpPath)`, move the old dir aside,
-    * move tmp in, drop old — a crash between renames leaves dst or
-    * dst_old intact, and [[recoverSwap]] (run there AND by every public
-    * entry point that touches the dir, where the crash actually
-    * surfaces) restores dst. */
-  private def swapDir(spark: SparkSession, dirPath: String)(write: String => Unit): Unit =
-    graft.fs.AtomicDir.swapDir(spark, dirPath)(write)
+  // Every swapped dir here goes through [[graft.fs.AtomicDir]]: `swapDir`
+  // writes the replacement to `<dir>_tmp`, moves the live dir aside to
+  // `<dir>_old`, moves tmp in, drops old — a crash between the renames
+  // leaves dst or dst_old intact. PUBLIC entry points that read or
+  // rewrite a swapped dir call `recoverSwap` FIRST: the recovery branch
+  // inside swapDir alone is unreachable when the caller (e.g.
+  // [[compactBatchArtifact]]'s `spark.read.parquet(dir)`, or any read*
+  // helper) touches the missing dst before the swap runs.
 
   /** Compact a `batch=<id>`-partitioned artifact directory: fold every
     * partition EXCEPT the newest through `fold` (identity for
@@ -1931,28 +1835,22 @@ object OnlineRefresh {
   def compactRetractedCorpus(spark: SparkSession, outPath: String,
       idCol: String = "doc_id"): Boolean = {
     recoverSwap(spark, outPath)
-    val fs = new org.apache.hadoop.fs.Path(outPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val docEpochs = epochIds(spark, s"$outPath/docs")
     if (docEpochs.length < 3) return false
     val newest = docEpochs.last
     val target = docEpochs.head
-    val hasSigs = fs.exists(new org.apache.hadoop.fs.Path(s"$outPath/sigs"))
     val dels = spark.read.parquet(s"$outPath/dels")
       .select(col(idCol).as("__del_id"), col("batch").cast("long").as("__del_batch"))
     // tombstones OLDER than the newest epoch are fully applied by the fold
     val oldDels = dels.where(col("__del_batch") < lit(newest))
     def foldWithDels(sub: String): (DataFrame, DataFrame) = {
       val df = spark.read.parquet(s"$outPath/$sub")
-      val folded = df.where(col("batch") =!= newest)
-        .join(oldDels,
-          df(idCol) === col("__del_id") && col("__del_batch") > df("batch"),
-          "left_anti")
-        .drop("batch")
+      val folded = dropLaterTombstoned(df.where(col("batch") =!= newest),
+        oldDels, idCol).drop("batch")
       (folded, df.where(col("batch") === newest).drop("batch"))
     }
     val (docsFolded, docsNewest) = foldWithDels("docs")
-    val sigs = if (hasSigs) Some(foldWithDels("sigs")) else None
+    val sigs = if (pathExists(spark, s"$outPath/sigs")) Some(foldWithDels("sigs")) else None
     val newestDels = spark.read.parquet(s"$outPath/dels")
       .where(col("batch").cast("long") === newest).drop("batch")
     swapDir(spark, outPath) { tmp =>
@@ -2010,14 +1908,7 @@ object OnlineRefresh {
   def retractBm25Artifact(spark: SparkSession, outPath: String,
       docIds: DataFrame, idCol: String = "doc_id"): Unit = {
     recoverSwap(spark, outPath)
-    val fs = new org.apache.hadoop.fs.Path(outPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val delsPath = new org.apache.hadoop.fs.Path(s"$outPath/dels")
-    // a dels dir with no batch= child yet (stream created it, no epoch
-    // landed) has no schema to infer — treat as absent
-    val dels = if (fs.exists(delsPath) &&
-        fs.listStatus(delsPath).exists(_.getPath.getName.startsWith("batch=")))
-      Some(spark.read.parquet(s"$outPath/dels")) else None
+    val dels = standingDels(spark, outPath)
     dels.foreach { d =>
       val overlap = d.select(col(idCol))
         .join(broadcast(docIds.select(col(idCol)).distinct()), Seq(idCol), "left_semi")
@@ -2151,33 +2042,40 @@ object OnlineRefresh {
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$outPath/sigs"))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$outPath/docs"))
-    val idType = schema(idCol).dataType
-    val sigSchema = new StructType()
-      .add(idCol, idType).add("dg", org.apache.spark.sql.types.LongType)
-      .add("sig", org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))
-      .add("batch", org.apache.spark.sql.types.LongType)
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val standing = spark.read.schema(sigSchema).parquet(s"$outPath/sigs")
-          .where(col("batch") < lit(batchId)).drop("batch")
-        graft.ops.Dedup
-          .minhashAgainst(standing, batch, textCol, idCol, shingleK,
-            numHashes, bands, threshold, portableHash, maxBucketFreq)
-          .write.mode("overwrite").parquet(s"$outPath/docs/batch=$batchId")
-        graft.ops.Dedup
-          .minhashSignatures(spark.read.parquet(s"$outPath/docs/batch=$batchId"),
-            textCol, idCol, shingleK, numHashes, portableHash)
-          .write.mode("overwrite").parquet(s"$outPath/sigs/batch=$batchId")
-        ()
-      }
-      .start()
+    prepareRoot(spark, outPath, "sigs", "docs")
+    val sigSchema = minhashSigSchema(schema, idCol)
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger) { (batch, batchId) =>
+      val standing = spark.read.schema(sigSchema).parquet(s"$outPath/sigs")
+        .where(col("batch") < lit(batchId)).drop("batch")
+      landMinhashEpoch(spark, standing, batch, outPath, batchId, textCol,
+        idCol, shingleK, numHashes, bands, threshold, portableHash, maxBucketFreq)
+    }
+  }
+
+  /** The `sigs/batch=<id>` artifact schema of both MinHash loops (typed
+    * up front: the first epoch reads an empty dir). */
+  private def minhashSigSchema(schema: StructType, idCol: String): StructType =
+    new StructType().add(idCol, schema(idCol).dataType).add("dg", LongType)
+      .add("sig", ArrayType(LongType)).add("batch", LongType)
+
+  /** One MinHash epoch of both loops: clean `docs` against the `standing`
+    * signatures, land the survivors as `docs/batch=<id>`, then their
+    * signatures as `sigs/batch=<id>` — from the LANDED partition (one cheap
+    * re-read; the survivor frame's lineage would re-run the dedup). */
+  private def landMinhashEpoch(spark: SparkSession, standing: DataFrame,
+      docs: DataFrame, outPath: String, batchId: Long, textCol: String,
+      idCol: String, shingleK: Int, numHashes: Int, bands: Int,
+      threshold: Double, portableHash: Boolean,
+      maxBucketFreq: Option[Int]): Unit = {
+    graft.ops.Dedup
+      .minhashAgainst(standing, docs, textCol, idCol, shingleK,
+        numHashes, bands, threshold, portableHash, maxBucketFreq)
+      .write.mode("overwrite").parquet(s"$outPath/docs/batch=$batchId")
+    graft.ops.Dedup
+      .minhashSignatures(spark.read.parquet(s"$outPath/docs/batch=$batchId"),
+        textCol, idCol, shingleK, numHashes, portableHash)
+      .write.mode("overwrite").parquet(s"$outPath/sigs/batch=$batchId")
   }
 
   /** [[minhashIncrementalStream]] with a DELETION FEED interleaved — the
@@ -2232,56 +2130,52 @@ object OnlineRefresh {
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
-    recoverSwap(spark, outPath) // root swap: compactRetractedCorpus
-    for (sub <- Seq("sigs", "docs", "dels"))
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$outPath/$sub"))
-    val idType = schema(idCol).dataType
-    val sigSchema = new StructType()
-      .add(idCol, idType).add("dg", org.apache.spark.sql.types.LongType)
-      .add("sig", org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))
-      .add("batch", org.apache.spark.sql.types.LongType)
-    val delSchema = new StructType()
-      .add(idCol, idType).add("batch", org.apache.spark.sql.types.LongType)
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.where(col(opCol) === lit("del")).select(col(idCol))
-          .write.mode("overwrite").parquet(s"$outPath/dels/batch=$batchId")
-        // ORDERING-AWARE retraction — the same later-tombstone rule the
-        // serving read uses: a tombstone kills only signatures that
-        // arrived BEFORE it, so a same-id delete-then-reinsert keeps the
-        // reinserted doc's signature standing (an id-only anti-join left
-        // the live reinsert invisible to later dedup decisions while
-        // readRetractedCorpus still served it — duplicate texts)
-        val dels = spark.read.schema(delSchema).parquet(s"$outPath/dels")
-          .where(col("batch") <= lit(batchId))
-          .select(col(idCol).as("__del_id"), col("batch").as("__del_batch"))
-        val sigsStanding = spark.read.schema(sigSchema).parquet(s"$outPath/sigs")
-          .where(col("batch") < lit(batchId))
-        val standing = sigsStanding
-          .join(broadcast(dels),
-            sigsStanding(idCol) === col("__del_id") &&
-              col("__del_batch") > sigsStanding("batch"),
-            "left_anti")
-          .drop("batch")
-        graft.ops.Dedup
-          .minhashAgainst(standing,
-            batch.where(col(opCol) === lit("ins")).drop(opCol),
-            textCol, idCol, shingleK, numHashes, bands, threshold,
-            portableHash, maxBucketFreq)
-          .write.mode("overwrite").parquet(s"$outPath/docs/batch=$batchId")
-        graft.ops.Dedup
-          .minhashSignatures(spark.read.parquet(s"$outPath/docs/batch=$batchId"),
-            textCol, idCol, shingleK, numHashes, portableHash)
-          .write.mode("overwrite").parquet(s"$outPath/sigs/batch=$batchId")
-        ()
-      }
-      .start()
+    prepareRoot(spark, outPath, "sigs", "docs", "dels") // root swap: compactRetractedCorpus
+    val sigSchema = minhashSigSchema(schema, idCol)
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger) { (batch, batchId) =>
+      landDels(batch, opCol, idCol, outPath, batchId)
+      // ORDERING-AWARE retraction — the same later-tombstone rule the
+      // serving read uses: a tombstone kills only signatures that
+      // arrived BEFORE it, so a same-id delete-then-reinsert keeps the
+      // reinserted doc's signature standing (an id-only anti-join left
+      // the live reinsert invisible to later dedup decisions while
+      // readRetractedCorpus still served it — duplicate texts)
+      val standing = retractedStanding(spark, outPath, "sigs", sigSchema,
+        schema, idCol, batchId)
+      landMinhashEpoch(spark, standing, inserts(batch, opCol), outPath,
+        batchId, textCol, idCol, shingleK, numHashes, bands, threshold,
+        portableHash, maxBucketFreq)
+    }
   }
+
+  /** A corpus retract loop's standing side for epoch `batchId`: the
+    * `sub` rows of earlier epochs minus every tombstone so far (batch ≤
+    * this one — delete-first within a batch) under the later-tombstone
+    * rule, `batch` column dropped. */
+  private def retractedStanding(spark: SparkSession, outPath: String,
+      sub: String, subSchema: StructType, schema: StructType, idCol: String,
+      batchId: Long): DataFrame = {
+    val delSchema = new StructType()
+      .add(idCol, schema(idCol).dataType).add("batch", LongType)
+    val dels = spark.read.schema(delSchema).parquet(s"$outPath/dels")
+      .where(col("batch") <= lit(batchId))
+      .select(col(idCol).as("__del_id"), col("batch").as("__del_batch"))
+    val rows = spark.read.schema(subSchema).parquet(s"$outPath/$sub")
+      .where(col("batch") < lit(batchId))
+    dropLaterTombstoned(rows, broadcast(dels), idCol).drop("batch")
+  }
+
+  /** THE later-tombstone rule of the corpus retract loops: drop each row
+    * of the `batch`-columned `rows` that a tombstone from a LATER epoch
+    * names — a tombstone applies to rows that arrived before it, so a
+    * delete-then-reinsert keeps the reinsert. `dels` carries
+    * (`__del_id`, `__del_batch`); callers pass it broadcast or not. */
+  private def dropLaterTombstoned(rows: DataFrame, dels: DataFrame,
+      idCol: String): DataFrame =
+    rows.join(dels,
+      rows(idCol) === col("__del_id") && col("__del_batch") > rows("batch"),
+      "left_anti")
 
   /** The surviving corpus of a [[minhashIngestRetractStream]] /
     * [[dedupIngestRetractStream]] run (both land `docs/batch=<id>` +
@@ -2292,12 +2186,9 @@ object OnlineRefresh {
   def readRetractedCorpus(spark: SparkSession, outPath: String,
       idCol: String = "doc_id"): DataFrame = {
     recoverSwap(spark, outPath) // root swap: compactRetractedCorpus
-    val docs = spark.read.parquet(s"$outPath/docs")
     val dels = spark.read.parquet(s"$outPath/dels")
       .select(col(idCol).as("__del_id"), col("batch").as("__del_batch"))
-    docs.join(dels,
-        docs(idCol) === col("__del_id") && col("__del_batch") > docs("batch"),
-        "left_anti")
+    dropLaterTombstoned(spark.read.parquet(s"$outPath/docs"), dels, idCol)
   }
 
   /** [[dedupIncrementalStream]] with a DELETION FEED interleaved — the
@@ -2330,44 +2221,21 @@ object OnlineRefresh {
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
-    recoverSwap(spark, outPath) // root swap: compactRetractedCorpus
-    for (sub <- Seq("docs", "dels"))
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$outPath/$sub"))
-    val docSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.filterNot(_.name == opCol))
-    val standingSchema = docSchema.add("batch", org.apache.spark.sql.types.LongType)
-    val delSchema = new StructType()
-      .add(idCol, schema(idCol).dataType).add("batch", org.apache.spark.sql.types.LongType)
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.where(col(opCol) === lit("del")).select(col(idCol))
-          .write.mode("overwrite").parquet(s"$outPath/dels/batch=$batchId")
-        // ordering-aware retraction — see minhashIngestRetractStream: an
-        // id-only anti-join would drop a reinserted doc's standing row
-        val dels = spark.read.schema(delSchema).parquet(s"$outPath/dels")
-          .where(col("batch") <= lit(batchId))
-          .select(col(idCol).as("__del_id"), col("batch").as("__del_batch"))
-        val docsStanding = spark.read.schema(standingSchema).parquet(s"$outPath/docs")
-          .where(col("batch") < lit(batchId))
-        val standing = docsStanding
-          .join(broadcast(dels),
-            docsStanding(idCol) === col("__del_id") &&
-              col("__del_batch") > docsStanding("batch"),
-            "left_anti")
-          .drop("batch")
-        graft.ops.Dedup
-          .dedupAgainst(standing,
-            batch.where(col(opCol) === lit("ins")).drop(opCol),
-            textCol, idCol, nBlocks, maxBlockFreq)
-          .write.mode("overwrite").parquet(s"$outPath/docs/batch=$batchId")
-        ()
-      }
-      .start()
+    prepareRoot(spark, outPath, "docs", "dels") // root swap: compactRetractedCorpus
+    val standingSchema = StructType(schema.fields.filterNot(_.name == opCol))
+      .add("batch", LongType)
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger) { (batch, batchId) =>
+      landDels(batch, opCol, idCol, outPath, batchId)
+      // ordering-aware retraction — see minhashIngestRetractStream: an
+      // id-only anti-join would drop a reinserted doc's standing row
+      val standing = retractedStanding(spark, outPath, "docs", standingSchema,
+        schema, idCol, batchId)
+      graft.ops.Dedup
+        .dedupAgainst(standing, inserts(batch, opCol), textCol, idCol,
+          nBlocks, maxBlockFreq)
+        .write.mode("overwrite").parquet(s"$outPath/docs/batch=$batchId")
+    }
   }
 
   /** [[buildBm25IndexStream]] with a DELETION FEED interleaved — streaming
@@ -2403,39 +2271,14 @@ object OnlineRefresh {
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
-    // self-heal BEFORE creating subdirectories: retractBm25Artifact /
-    // applyBm25Tombstones root-swap outPath, and a crash between their
-    // renames leaves outPath missing with outPath_old intact — if
-    // createDirectories recreated outPath first, recoverSwap's
-    // !exists(dst) guard could never fire again and the committed
-    // postings/stats in _old would be silently lost (the checkpoint
-    // prevents re-delivery)
-    recoverSwap(spark, outPath)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$outPath/dels"))
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.fs.Layout.withWriterLease(spark, outPath,
-          s"bm25IndexRetractStream:$checkpoint") {
-        batch.where(col(opCol) === lit("del")).select(col(idCol))
-          .write.mode("overwrite").parquet(s"$outPath/dels/batch=$batchId")
-        // ONE tokenize pass per epoch (the [[buildBm25IndexStream]] recipe,
-        // including its rejected-Observation note — the separate count is
-        // cheaper than a CollectMetrics barrier in the tokenize pipeline)
-        val ins = batch.where(col(opCol) === lit("ins")).drop(opCol)
-        val ix = graft.ops.TextAnalysis.bm25Index(ins, textCol, idCol)
-        ix.postings.write.mode("overwrite").parquet(s"$outPath/postings/batch=$batchId")
-        graft.ops.TextAnalysis.bm25StatsFromPostings(
-          spark.read.parquet(s"$outPath/postings/batch=$batchId"), ins.count())
-          .write.mode("overwrite").parquet(s"$outPath/stats/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    // retractBm25Artifact / applyBm25Tombstones root-swap outPath — heal
+    // that before creating dels ([[prepareRoot]]'s ordering)
+    prepareRoot(spark, outPath, "dels")
+    epochStream(spark, inputPath, schema, checkpoint, trigger,
+        maxFilesPerTrigger, Some(outPath -> "bm25IndexRetractStream")) { (batch, batchId) =>
+      landDels(batch, opCol, idCol, outPath, batchId)
+      landBm25Epoch(spark, inserts(batch, opCol), outPath, batchId, textCol, idCol)
+    }
   }
 
   /** Serve the [[buildBm25IndexRetractStream]] artifact: merge-fold the

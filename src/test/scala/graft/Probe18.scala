@@ -186,6 +186,7 @@ object Probe18 {
               lit(null).cast("double").as("contamination")))
             .write.format("noop").mode("overwrite").save()
         }
+        fuzzy.unpersist(false)
       case "explain" =>
         // PROBE18_QUERIES=q_a,q_b PROBE18_SUFFIX=before — dump
         // .explain("formatted") of each named declared query to plans/r18/

@@ -37,6 +37,30 @@ class StreamingSpec extends SparkSpec {
     assert(snap == Map(1L -> 9.0, 2L -> 5.0))
   }
 
+  test("online refresh restores a snapshot swap crashed between its renames") {
+    val tmp = Files.createTempDirectory("graft-snapheal").toString
+    def refresh(): Unit = OnlineRefresh.start(spark, s"$tmp/in/*", schema,
+      s"$tmp/snap", s"$tmp/ckpt", Seq("user_id"), "ts").awaitTermination()
+    Seq((1L, Timestamp.valueOf("2024-01-01 00:00:00"), 1.0),
+        (2L, Timestamp.valueOf("2024-01-01 00:00:00"), 2.0))
+      .toDF("user_id", "ts", "value").write.parquet(s"$tmp/in/b1")
+    refresh()
+    // the state a crash between the swap's two renames leaves: the live
+    // snapshot moved aside, its replacement never moved in
+    Files.move(java.nio.file.Paths.get(s"$tmp/snap"),
+      java.nio.file.Paths.get(s"$tmp/snap_old"))
+    Seq((1L, Timestamp.valueOf("2024-01-02 00:00:00"), 9.0),
+        (3L, Timestamp.valueOf("2024-01-01 00:00:00"), 3.0))
+      .toDF("user_id", "ts", "value").write.parquet(s"$tmp/in/b2")
+    refresh()
+    val snap = spark.read.parquet(s"$tmp/snap")
+      .select("user_id", "value").as[(Long, Double)].collect().toMap
+    assert(snap == Map(1L -> 9.0, 2L -> 2.0, 3L -> 3.0),
+      "latest-per-key over both batches: the set-aside snapshot must be " +
+        "restored, not rebuilt from the second batch alone")
+    assert(!Files.exists(java.nio.file.Paths.get(s"$tmp/snap_old")))
+  }
+
   test("flatMapGroupsWithState latest-per-key emits only real advances") {
     // Spark 4.1 relocated MemoryStream under execution.streaming.runtime
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -324,6 +348,39 @@ class StreamingSpec extends SparkSpec {
     assert(one.nonEmpty && one.size < in.count(),
       s"gate must actually discriminate (kept ${one.size})")
     assert(one == four, "survivor set must not depend on how the stream was batched")
+  }
+
+  test("decontaminateStream releases its cached reference grams when the query ends") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.streaming.Trigger
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val tmp = Files.createTempDirectory("graft-sdecrel").toString
+    Seq((1L, "the quick brown fox jumps over it"), (2L, "a lazy dog sleeps all day long"))
+      .toDF("doc_id", "text").write.parquet(s"$tmp/src")
+    val schema = spark.read.parquet(s"$tmp/src").schema
+    val ref = Seq((9L, "the quick brown fox jumps over it")).toDF("doc_id", "text")
+    // the cache manager matches by plan: the same derivation resolves to
+    // the stream's cached frame while it is held
+    def cached: Boolean = graft.ops.Dedup.referenceGrams(ref, "text", 3)
+      .queryExecution.withCachedData.collectFirst { case r: InMemoryRelation => r }
+      .isDefined
+    def run(name: String, trigger: Trigger) =
+      OnlineRefresh.decontaminateStream(spark, s"$tmp/src", schema, () => ref,
+        s"$tmp/out_$name", s"$tmp/ck_$name", maxContamination = 0.5,
+        trigger = trigger)
+    val live = run("live", Trigger.ProcessingTime("100 milliseconds"))
+    live.processAllAvailable()
+    assert(cached, "a running query holds the reference grams")
+    live.stop()
+    live.awaitTermination()
+    // the release rides the listener bus, which runs after awaitTermination
+    eventually(timeout(30.seconds), interval(50.millis)) { assert(!cached) }
+    val once = run("once", Trigger.AvailableNow())
+    once.awaitTermination()
+    eventually(timeout(30.seconds), interval(50.millis)) { assert(!cached) }
+    assert(spark.read.parquet(s"$tmp/out_once").select("doc_id").as[Long]
+      .collect().toSeq == Seq(2L), "the gate still drops the contaminated doc")
   }
 
   test("streaming incremental dedup: sequential fold vs standing corpus, resume is a no-op") {

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Dev-loop comparator mimicking the driver: for each query dumped by
 graft.Verify, run its DuckDB oracle over the same sf dir and compare
-row sets (columns sorted by name, rows sorted, values hashed)."""
+row sets (columns sorted by name, rows sorted, values hashed). Exits 1
+when any query fails or has no Spark result, 0 when all agree."""
 import duckdb, json, sys, glob, os
 import pandas as pd
 
@@ -69,3 +70,4 @@ missing = [q for q in oracle if not os.path.isdir(f"{outdir}/{q}")]
 if missing:
     print("MISSING SPARK RESULTS (query crashed):", missing)
 print(f"\n{len(fails)} failures: {fails}" if fails or missing else "\nALL OK")
+sys.exit(1 if fails or missing else 0)
