@@ -1,6 +1,6 @@
 package graft.fs
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The unified feature-store facade — the reference's flagship API surface
@@ -16,27 +16,38 @@ import org.apache.spark.sql.functions._
   * Scale notes: historical reads use the merge (union + single shuffle +
   * carry-forward) PIT formulation — linear in input, no entity×features-in-
   * TTL row explosion (see [[PointInTime]]'s scaladoc for the 100 TB
-  * rationale). Online lookups broadcast the per-view snapshot, which is
-  * one row per live entity by construction — but the snapshot is a lazy
-  * plan, not stored data (see [[materializeOnline]]), so every lookup
-  * re-runs the latest-per-key argmax over the view's whole history.
-  * Multi-view requests chain one PIT join per view; each is its own
-  * single shuffle on that view's keys.
+  * rationale). Online lookups broadcast the per-view snapshot, one row per
+  * live entity, held on the driver as local rows (see
+  * [[materializeOnline]]): a lookup scans no source file, and a refresh
+  * folds in only the day partitions that changed. Multi-view requests
+  * chain one PIT join per view; each is its own single shuffle on that
+  * view's keys.
   */
-final class FeatureStore(
+final class FeatureStore private (
     val registry: Registry.FeatureRegistry,
-    sourceLoader: String => DataFrame,
-    /** Per-SOURCE unique tie-break columns (e.g. an event id): duplicate
-      * feature timestamps within a key resolve to the highest tie-break,
-      * making reads deterministic. Sources absent here tie arbitrarily. */
-    tieBreaks: Map[String, Seq[String]] = Map.empty
+    /** Where the sources live: a bare loader, or [[OfflineStore]] tables,
+      * whose partition listing lets a refresh read only the changed days. */
+    sources: Either[String => DataFrame, OfflineStore],
+    tieBreaks: Map[String, Seq[String]]
 ) {
 
-  // TrieMap: a serving facade is naturally hit from concurrent driver
-  // threads; a plain mutable.Map could corrupt under simultaneous inserts
-  // (getOrElseUpdate may compute a snapshot twice under a race, which is
-  // harmless — both are identical lazy plans)
-  private val snapshots = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  /** `sourceLoader` maps a view's source name to its feature history.
+    * `tieBreaks` are per-SOURCE unique tie-break columns (e.g. an event id):
+    * duplicate feature timestamps within a key resolve to the highest
+    * tie-break, making reads deterministic. Sources absent there tie
+    * arbitrarily. */
+  def this(registry: Registry.FeatureRegistry, sourceLoader: String => DataFrame,
+      tieBreaks: Map[String, Seq[String]] = Map.empty) =
+    this(registry, Left(sourceLoader), tieBreaks)
+
+  import FeatureStore.Held
+
+  private def sourceLoader(source: String): DataFrame = sources.fold(_(source), _.read(source))
+
+  // Each entry is replaced whole, so a read sees one snapshot or the next,
+  // never a mix, and never waits. Builds and refreshes take `refreshing`.
+  private val held = scala.collection.concurrent.TrieMap.empty[String, Held]
+  private val refreshing = new Object
 
   /** Resolved views in a deterministic (name-sorted) join order. */
   private def resolved(features: Seq[String]): Seq[(Registry.FeatureView, Seq[String])] =
@@ -68,41 +79,72 @@ final class FeatureStore(
       )
     }
 
-  /** Latest-per-key snapshot PLAN for a view
-    * ([[OnlineStore.latestSnapshot]]'s map-side-collapsing argmax). What is
-    * memoized per view is the lazy plan and its file listing, NOT data:
-    * every action on it — each [[getOnlineFeatures]] call — re-runs the
-    * argmax over the view's whole history (a 3-key read scans every
-    * landed row). It stands in for Feast's materialize-to-Redis in
-    * semantics only, not in cost.
+  /** Latest-per-key snapshot of a view ([[OnlineStore.latestSnapshot]]),
+    * built on first use, collected and held on the driver: reads
+    * broadcast it from there and scan no source file. Its size is the
+    * broadcast's: one row per live entity.
     *
-    * The snapshot is FROZEN at first use: the memoized plan pins the source's
-    * parquet file listing, so appends after materialization stay invisible
-    * and a concurrent [[OfflineStore.compactDay]] (which replaces data
-    * files) can make lookups on the stale plan fail with
-    * FileNotFoundException. That mirrors Feast, where online state only
-    * advances on an explicit `materialize` — call [[refreshOnline]] after
-    * ingest/compaction to advance it here. */
+    * The snapshot is FROZEN until [[refreshOnline]]: appends and
+    * compactions after it was built stay invisible to reads, which never
+    * touch the files again. That mirrors Feast, where online state only
+    * advances on an explicit `materialize`. */
   def materializeOnline(viewName: String): DataFrame =
-    snapshots.getOrElseUpdate(viewName, {
-      val v = registry.view(viewName)
-      require(v.online, s"feature view '$viewName' is not online-enabled")
-      OnlineStore.latestSnapshot(
-        sourceLoader(v.source), v.entity.joinKeys, v.timestampField,
+    held.get(viewName).getOrElse(refreshing.synchronized {
+      held.getOrElse(viewName, advance(viewName, None))
+    }).frame
+
+  /** Advance a view's snapshot to the source's current state (the explicit
+    * Feast `materialize` step) and return it; later [[getOnlineFeatures]]
+    * calls use it. Only the partition dirs that are new or whose file set
+    * changed since the last build are read and upserted into the held
+    * rows ([[OnlineStore.writeOnline]], the fold `OnlineRefresh.start`
+    * uses). A [[OfflineStore.compactDay]] rewrite re-delivers its day,
+    * which the idempotent fold absorbs. The delta is the changed days,
+    * small beside the history, so it folds with the held rows in one
+    * partition: one stage, no shuffle. Nothing changed: no Spark job.
+    * A partition dir that is gone ([[OfflineStore.expireOlderThan]]), or a
+    * store built from a bare `sourceLoader`, rebuilds through the same
+    * fold with nothing held, at the source scan's parallelism. Refreshes
+    * of one store run one at a time.
+    *
+    * The snapshot's columns are those of its last full build: the delta
+    * is read under the held schema, so a column that later appends add
+    * is not carried until the next full build. */
+  def refreshOnline(viewName: String): DataFrame =
+    refreshing.synchronized(advance(viewName, held.get(viewName))).frame
+
+  /** Fold the source's changes since `prev` into a new snapshot and publish
+    * it. Callers hold `refreshing`. The listing is taken before the read,
+    * so a file landing in between is read now and again next time, which
+    * the fold absorbs; it is never missed. */
+  private def advance(viewName: String, prev: Option[Held]): Held = {
+    val v = registry.view(viewName)
+    require(v.online, s"feature view '$viewName' is not online-enabled")
+    val offline = sources.toOption
+    val listing = offline.map(_.partitionListing(v.source))
+    val changed = for {
+      p <- prev
+      was <- p.listing
+      now <- listing if was.keySet.subsetOf(now.keySet)
+    } yield now.filter { case (dir, files) => !was.get(dir).contains(files) }
+    def fold(base: DataFrame, delta: DataFrame): Held = {
+      val folded = OnlineStore.writeOnline(base, delta, v.entity.joinKeys, v.timestampField,
         tieBreaks.getOrElse(v.source, Nil))
-    })
-
-  /** Re-materialize a view's snapshot against the source's CURRENT file
-    * listing (the explicit Feast `materialize` step). Returns the fresh
-    * snapshot; subsequent [[getOnlineFeatures]] calls use it. */
-  def refreshOnline(viewName: String): DataFrame = {
-    snapshots.remove(viewName)
-    materializeOnline(viewName)
+      Held(folded.sparkSession.createDataFrame(
+        java.util.Arrays.asList(folded.collect(): _*), folded.schema), listing)
+    }
+    val next = (prev, changed) match {
+      case (Some(p), Some(dirs)) if dirs.isEmpty => p
+      case (Some(p), Some(dirs)) =>
+        val delta = offline.get.readPartitions(v.source, dirs.keys, p.frame.schema)
+        fold(p.frame.coalesce(1), delta.coalesce(1))
+      case _ =>
+        val all = sourceLoader(v.source)
+        fold(all.sparkSession.createDataFrame(java.util.List.of[Row](), all.schema), all)
+    }
+    held.put(viewName, next)
+    next
   }
-
-  /** Drop every cached snapshot (e.g. after a bulk backfill or compaction
-    * across views); each view re-materializes lazily on next use. */
-  def invalidateOnline(): Unit = snapshots.clear()
 
   /** Feast `get_online_features`: broadcast-join the requested entity keys
     * against each view's latest snapshot. `asOf` + the view TTL expire
@@ -125,8 +167,13 @@ final class FeatureStore(
 }
 
 object FeatureStore {
+  /** A view's online snapshot: its latest-per-key rows as a local frame,
+    * and the source's [[OfflineStore.partitionListing]] they were built
+    * from (None without an [[OfflineStore]]: every refresh rebuilds). */
+  private final case class Held(frame: DataFrame, listing: Option[Map[String, Set[(String, Long)]]])
+
   /** Production wiring: sources load from an [[OfflineStore]] table. */
   def apply(offline: OfflineStore, registry: Registry.FeatureRegistry,
       tieBreaks: Map[String, Seq[String]] = Map.empty): FeatureStore =
-    new FeatureStore(registry, offline.read, tieBreaks)
+    new FeatureStore(registry, Right(offline), tieBreaks)
 }

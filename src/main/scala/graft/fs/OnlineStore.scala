@@ -53,8 +53,11 @@ final class PointLookupCache private[fs] (
   * The reference keeps this in Redis (hash per key, latest wins —
   * airflow/dags/load.py:139-148, feast/feature_store.yaml:10-12). Spark-first
   * restatement: a compact "latest snapshot" DataFrame materialized from the
-  * offline history, persisted as Parquet, refreshed by upsert; lookups are
-  * broadcast left joins (the snapshot is small — one row per live entity).
+  * offline history and held on the driver as local rows
+  * ([[FeatureStore.materializeOnline]]), refreshed by the [[writeOnline]]
+  * upsert fold over the changed partitions; lookups are broadcast left
+  * joins. Holding it and broadcasting it share one size envelope: one row
+  * per live entity.
   */
 object OnlineStore {
 

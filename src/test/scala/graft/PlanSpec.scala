@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, LocalTableScanExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.functions.col
 
 /** Physical-plan regression tests — the 100 TB story is made of these
   * properties, so they're asserted, not just eyeballed once:
@@ -10,6 +13,9 @@ import org.apache.spark.sql.execution.FormattedMode
 class PlanSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
+
+  /** Plan walks that descend into adaptive query stages. */
+  private object adaptive extends AdaptiveSparkPlanHelper
 
   private def plan(q: String): String =
     Queries.all(q)(spark, dir).queryExecution.explainString(FormattedMode)
@@ -113,10 +119,28 @@ class PlanSpec extends SparkSpec {
     assert(nodes(p, "Exchange") <= 2, s"facade PIT read regressed to multi-shuffle:\n$p")
   }
 
-  test("q_store_online_read: snapshot lookup broadcasts, argmax is partial+final") {
-    val p = plan("q_store_online_read")
+  test("q_store_online_read: lookup broadcasts the held snapshot, scans only the keys") {
+    val q = Queries.all("q_store_online_read")(spark, dir)
+    val p = q.queryExecution.explainString(FormattedMode)
     assert(p.contains("BroadcastHashJoin"), s"online lookup must broadcast the snapshot:\n$p")
+    assert(nodes(p, "Exchange") <= 2, s"online lookup must not shuffle beyond the keys' distinct:\n$p")
+    q.collect() // finalize AQE so the executed plan is concrete
+    val executed = q.queryExecution.executedPlan
+    val broadcastSide = adaptive.collect(executed) { case b: BroadcastExchangeExec => b }
+      .flatMap(b => adaptive.collect(b) { case l: LocalTableScanExec => l })
+    assert(broadcastSide.size == 1, s"the broadcast side must be the held LocalTableScan:\n$executed")
+    val scans = adaptive.collect(executed) { case f: FileSourceScanExec => f }
+    assert(scans.size == 1, s"only the keys' events scan may read files, not the history:\n$executed")
+  }
+
+  test("latest-per-key over events (q_online_lookup's snapshot): argmax is partial+final") {
+    val clicks = Queries.readEvents(spark, dir).where(col("event_type") === "click")
+      .select("user_id", "ts", "value", "event_id")
+    val p = graft.fs.OnlineStore.latestSnapshot(clicks, Seq("user_id"), "ts", Seq("event_id"))
+      .queryExecution.explainString(FormattedMode)
     assert(nodes(p, "Exchange") <= 2, s"snapshot argmax must pre-combine before its shuffle:\n$p")
+    assert(nodes(p, "SortAggregate") + nodes(p, "HashAggregate") == 2,
+      s"expect partial + final aggregate around the shuffle:\n$p")
   }
 
   test("q_range_join_merge: ONE user shuffle, no join operator at all") {
@@ -207,8 +231,6 @@ class PlanSpec extends SparkSpec {
     // inherited. Today column pruning splits the idf branch below the
     // repartition and the plan scans postings TWICE; the target is one,
     // and this count moves to 1 with that fix.
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val confs = Seq("spark.sql.adaptive.enabled", "spark.sql.exchange.reuse")
     val saved = confs.map(k => k -> spark.conf.getOption(k))
     confs.foreach(spark.conf.set(_, "true"))
@@ -217,7 +239,7 @@ class PlanSpec extends SparkSpec {
       df.collect() // collect (not count) so THIS plan instance finalizes
       val exec = df.queryExecution.executedPlan
       assert(exec.toString.contains("isFinalPlan=true"), "adaptive plan must have finalized")
-      val postingsScans = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(exec) {
+      val postingsScans = adaptive.collectWithSubqueries(exec) {
         case s: FileSourceScanExec
             if s.relation.location.rootPaths.exists(_.getName == "postings") => s
       }.size

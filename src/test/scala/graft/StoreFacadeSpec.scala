@@ -1,8 +1,12 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import graft.fs.{FeatureStore, PointInTime, Registry}
+import graft.fs.{FeatureStore, OfflineStore, OnlineStore, PointInTime, Registry}
 
 /** The unified facade must run the reference's training and serving scripts
   * shape-for-shape: `store.get_historical_features(entity_df, features=
@@ -90,7 +94,6 @@ class StoreFacadeSpec extends SparkSpec {
   }
 
   test("production wiring: facade over a real OfflineStore table") {
-    import graft.fs.{FeatureStore, OfflineStore}
     val root = java.nio.file.Files.createTempDirectory("graft-facade-store").toString
     val offline = OfflineStore(spark, root)
     // day-partitioned feature history, two entities
@@ -121,6 +124,129 @@ class StoreFacadeSpec extends SparkSpec {
     store.refreshOnline("aqi_info_v1")
     val refreshed = store.getOnlineFeatures(refs, Seq(entityId).toDF("entity_id")).collect().head
     assert(refreshed.getAs[Double]("aqi") == 999.0, "refreshOnline must see the append")
+  }
+
+  /** Feature rows (entity, hour stamp, aqi, fid) landed in a day-partitioned
+    * `aqi_info` table, the production layout. */
+  private def land(offline: OfflineStore, rows: (String, String, Double, Long)*): Unit =
+    offline.append("aqi_info", rows.map { case (e, t, aqi, fid) =>
+      val ts = Timestamp.valueOf(t)
+      (e, ts, ts.toLocalDateTime.getHour, 1, 5, aqi, fid)
+    }.toDF("entity_id", "feature_timestamp", "hour", "day", "dayOfWeek", "aqi", "fid")
+      .withColumn("year", year(col("feature_timestamp")))
+      .withColumn("month", month(col("feature_timestamp")))
+      .withColumn("day", dayofmonth(col("feature_timestamp"))))
+
+  private def offlineStore(prefix: String): (OfflineStore, FeatureStore) = {
+    val offline = OfflineStore(spark, java.nio.file.Files.createTempDirectory(prefix).toString)
+    (offline, FeatureStore(offline, Registry.defaultRegistry(), tieBreaks = Map("aqi_info" -> Seq("fid"))))
+  }
+
+  /** (stages submitted, parquet records read) by `body`'s Spark jobs.
+    * Listener events arrive in order, so once a marker job run after
+    * `body` is seen, every job of `body` has been. */
+  private def sparkWork(body: => Unit): (Int, Long) = {
+    val sc = spark.sparkContext
+    val group = s"work-${System.nanoTime}"
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val stages = new java.util.concurrent.ConcurrentHashMap[Int, String]
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        jobGroups.add(g)
+        e.stageIds.foreach(stages.put(_, g))
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (group == stages.get(e.stageId) && e.taskMetrics != null)
+          records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (!jobGroups.contains(s"$group-end") && System.nanoTime < deadline) Thread.sleep(10)
+      assert(jobGroups.contains(s"$group-end"), "listener never saw the marker job")
+      (stages.values.toArray.count(_ == group), records.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("refreshOnline ≡ latestSnapshot of the OfflineStore table after every step") {
+    val (offline, store) = offlineStore("graft-facade-refresh")
+    val view = "aqi_info_v1"
+    def agrees(step: String): Map[String, Row] = {
+      val got = store.refreshOnline(view)
+      val want = OnlineStore.latestSnapshot(offline.read("aqi_info"),
+        Seq("entity_id"), "feature_timestamp", Seq("fid"))
+      assert(got.columns.toSeq == want.columns.toSeq, step)
+      val rows = got.collect().sortBy(_.getString(0)).toSeq
+      assert(rows == want.collect().sortBy(_.getString(0)).toSeq, step)
+      rows.map(r => r.getString(0) -> r).toMap
+    }
+    def aqi(snap: Map[String, Row], e: String) = snap(e).getAs[Double]("aqi")
+
+    land(offline, ("a", "2025-05-01 01:00:00", 1.0, 1L), ("b", "2025-05-01 02:00:00", 2.0, 2L))
+    store.materializeOnline(view)
+    agrees("first build")
+    land(offline, ("a", "2025-05-02 01:00:00", 3.0, 3L))
+    assert(aqi(agrees("new day"), "a") == 3.0)
+    land(offline, ("b", "2025-05-02 04:00:00", 4.0, 4L))
+    assert(aqi(agrees("append to the same day"), "b") == 4.0)
+
+    // an append then a compaction of its day: reads keep serving the held
+    // rows, which reference no file that the compaction replaced
+    land(offline, ("a", "2025-05-02 05:00:00", 5.0, 5L))
+    assert(offline.compactDay("aqi_info", java.time.LocalDate.of(2025, 5, 2)) == ((3, 1)))
+    val frozen = store.getOnlineFeatures(refs, Seq("a", "b").toDF("entity_id"))
+      .collect().map(r => r.getString(0) -> r.getAs[Double]("aqi")).toMap
+    assert(frozen == Map("a" -> 3.0, "b" -> 4.0), "reads before the refresh serve the frozen rows")
+    assert(aqi(agrees("compactDay"), "a") == 5.0)
+
+    land(offline, ("a", "2025-05-01 23:00:00", 6.0, 6L))
+    assert(aqi(agrees("late row older than the key's latest"), "a") == 5.0)
+    land(offline, ("c", "2025-05-01 03:00:00", 7.0, 7L))
+    assert(aqi(agrees("new key in an old day"), "c") == 7.0)
+    val before = store.materializeOnline(view)
+    agrees("no change")
+    assert(store.materializeOnline(view) eq before, "a refresh with nothing changed keeps the snapshot")
+
+    assert(offline.expireOlderThan("aqi_info", java.time.LocalDate.of(2025, 5, 2)) == 1)
+    val expired = agrees("expireOlderThan")
+    assert(expired.keySet == Set("a", "b"), "a key whose rows all expired leaves the snapshot")
+  }
+
+  test("refreshOnline keeps the snapshot's columns when an append adds one") {
+    val (offline, store) = offlineStore("graft-facade-schema")
+    land(offline, ("a", "2025-05-01 01:00:00", 1.0, 1L))
+    val cols = store.materializeOnline("aqi_info_v1").columns.toSeq
+    offline.append("aqi_info", Seq(("a", Timestamp.valueOf("2025-05-02 01:00:00"), 1, 5, 2.0, 2L, 9.5))
+      .toDF("entity_id", "feature_timestamp", "hour", "dayOfWeek", "aqi", "fid", "extra")
+      .withColumn("year", lit(2025)).withColumn("month", lit(5)).withColumn("day", lit(2)))
+    val snap = store.refreshOnline("aqi_info_v1")
+    assert(snap.columns.toSeq == cols, "the delta is read under the held schema")
+    assert(snap.collect().map(_.getAs[Double]("aqi")).toSeq == Seq(2.0), "the new day still folds")
+  }
+
+  test("online reads scan no source file; a refresh reads only changed days, none when unchanged") {
+    val (offline, store) = offlineStore("graft-facade-work")
+    land(offline, (entityId, "2025-05-01 01:00:00", 1.0, 1L), (entityId, "2025-05-01 02:00:00", 2.0, 2L))
+    store.materializeOnline("aqi_info_v1")
+
+    val read = store.getOnlineFeatures(refs, Seq(entityId).toDF("entity_id"))
+    val (_, readRecords) = sparkWork(assert(read.collect().head.getAs[Double]("aqi") == 2.0))
+    val scans = new AdaptiveSparkPlanHelper {}.collect(read.queryExecution.executedPlan) {
+      case f: FileSourceScanExec => f
+    }
+    assert(scans.isEmpty && readRecords == 0, s"an online read scanned files: $scans")
+
+    assert(sparkWork(store.refreshOnline("aqi_info_v1"))._1 == 0, "nothing changed, yet a job ran")
+    land(offline, (entityId, "2025-05-02 01:00:00", 3.0, 3L))
+    // a small delta folds with the held rows in one partition: one stage, no shuffle
+    val (stages, records) = sparkWork(store.refreshOnline("aqi_info_v1"))
+    assert(stages == 1 && records == 1, s"a one-row day refreshed in $stages stages reading $records rows")
   }
 
   test("multi-view resolution joins each requested view once") {
