@@ -50,9 +50,43 @@ final case class OfflineStore(spark: SparkSession, root: String) {
   def append(name: String, df: DataFrame, partitionCols: Seq[String] = Seq("year", "month", "day")): Unit =
     df.write.mode("append").partitionBy(partitionCols: _*).parquet(tablePath(name))
 
+  // Per table: the (relative path, length) of the data file whose footer
+  // gave the schema, and that schema. Replaced whole, read without a lock.
+  private val schemas = scala.collection.concurrent.TrieMap.empty[String, ((String, Long), StructType)]
+
   /** Full-history read. Partition pruning applies to any filter the caller
-    * adds on the partition columns. */
-  def read(name: String): DataFrame = spark.read.parquet(tablePath(name))
+    * adds on the partition columns.
+    *
+    * The schema is Spark's own inference, memoized per table. With
+    * `mergeSchema` off, `spark.read.parquet` samples the footer of ONE
+    * file: the first data file in sorted path order (`ParquetUtils.
+    * inferSchema`); finding it costs a [[partitionListing]] walk (~3 ms)
+    * where the footer read is a Spark job (72-79 ms against 11-13 ms for
+    * the same read with a schema given, 4-vCPU VM, the benchmark's
+    * ~15-day feature table). The memo is keyed by that file's (path,
+    * length), so it is re-inferred when the file changes: an
+    * [[expireOlderThan]] or a [[compactDay]] of the oldest day. It holds
+    * only while `spark.sql.parquet.mergeSchema` is off (Spark's default;
+    * this read passes no option), and is not used when it is on. The
+    * partition columns keep the types first inferred for them: integers
+    * for the day dirs that [[append]] writes. A table with no data file
+    * reads, and fails, as `spark.read.parquet` does. */
+  def read(name: String): DataFrame = {
+    val path = tablePath(name)
+    val sampled =
+      if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) None
+      else partitionListing(name).toSeq.flatMap { case (group, files) =>
+        files.map { case (file, len) => (if (group == file) file else s"$group/$file", len) }
+      }.minByOption(_._1)
+    sampled.fold(spark.read.parquet(path)) { file =>
+      val schema = schemas.get(name).collect { case (`file`, s) => s }.getOrElse {
+        val s = spark.read.parquet(path).schema
+        schemas.put(name, (file, s))
+        s
+      }
+      spark.read.schema(schema).parquet(path)
+    }
+  }
 
   /** The table's data files grouped by partition directory: relative dir
     * path (`year=2025/month=5/day=1`) -> set of (file name, length). A
@@ -98,6 +132,18 @@ final case class OfflineStore(spark: SparkSession, root: String) {
     read(name).where(
       make_date(col("year"), col("month"), col("day")) >= to_date(lit(d.toString))
     )
+  }
+
+  /** Rows of the day partitions from `since` (none before it when absent)
+    * through `until`, both inclusive: [[readSince]] with an upper bound,
+    * pruned the same way. A day dir is the calendar date of the rows'
+    * timestamp in the writer's session zone ([[expireOlderThan]] relies on
+    * the same contract), so a caller bounding a timestamp widens its dates
+    * by a day for a reader in another zone. */
+  def readBetween(name: String, since: Option[java.time.LocalDate], until: java.time.LocalDate): DataFrame = {
+    val day = make_date(col("year"), col("month"), col("day"))
+    val upTo = day <= to_date(lit(until.toString))
+    read(name).where(since.fold(upTo)(d => day >= to_date(lit(d.toString)) && upTo))
   }
 
   /** Current watermark (exclusive lower bound for the next run), if any. */

@@ -12,7 +12,11 @@ import org.apache.spark.sql.functions._
   * semantics of Feast's `get_historical_features`
   * (ref: model/aqi_predict_hn.py:25-33; TTL feast/features/aqi_feature.py:20).
   *
-  * Two physical formulations, equivalent results (tested against each other):
+  * Two physical formulations, equivalent results (tested against each other,
+  * PointInTimeSpec). Neither matches a null key or a null timestamp: the
+  * spec form's `===`/`<=` are never true on null, and the merge form drops
+  * feature rows with a null key or timestamp before its union, so an
+  * entity row with a null key gets nulls (as in SQL and Feast).
   *
   *   - [[historicalFeatures]] — equi-join on keys + range predicate, then
   *     `row_number` rank-to-1 per entity row. Simple and exactly the spec,
@@ -98,9 +102,13 @@ object PointInTime {
       tieBreak: Seq[String] = Nil
   ): DataFrame = {
     val entityCols = entityDf.columns.toSeq
+    // A feature row with a null key or timestamp matches no entity row
+    // (the spec form's `===` and `<=`); left in, a null key would share
+    // the null-key entity rows' window partition and carry its values.
+    val matchable = (keys :+ featureTs).map(c => col(c).isNotNull).reduce(_ && _)
     // Common shape: keys, __ts, __kind (0=feature sorts before 1=entity at
     // equal ts → inclusive `featureTs <= eventTs`), tie-break, payloads.
-    val fSide = featureDf.select(
+    val fSide = featureDf.where(matchable).select(
       keys.map(col) ++ Seq(col(featureTs).as("__ts"), lit(0).as("__kind")) ++
         tieBreak.map(t => col(t).as(s"__tb_$t")) ++
         featureCols.map(c => col(c).as(s"__f_$c")) ++

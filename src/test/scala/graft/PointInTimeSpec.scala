@@ -6,8 +6,9 @@ import graft.fs.PointInTime
 
 /** As-of join semantics per FIXTURES.md §5: event before any feature → null,
   * feature exactly at event ts (inclusive), feature older than TTL → null,
-  * duplicate feature timestamps (tie-break), interleaved entities — and the
-  * join+rank vs merge formulations agreeing on all of it. */
+  * duplicate feature timestamps (tie-break), interleaved entities, null
+  * keys and null feature timestamps (never match) — and the join+rank vs
+  * merge formulations agreeing on all of it, with and without a TTL. */
 class PointInTimeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -20,7 +21,8 @@ class PointInTimeSpec extends SparkSpec {
     (3L, "a", ts("2024-01-20 00:00:00")), // latest feature older than 7d TTL -> null
     (4L, "a", ts("2024-01-03 00:00:00")), // duplicate feature ts at 01-02 10:00 -> max tie id
     (5L, "b", ts("2024-01-02 12:00:00")), // interleaved entity
-    (6L, "c", ts("2024-01-02 12:00:00"))  // entity with no features at all
+    (6L, "c", ts("2024-01-02 12:00:00")), // entity with no matchable features
+    (7L, null, ts("2024-01-02 12:00:00")) // null key never matches, not even a null-key feature
   ).toDF("probe_id", "entity", "event_ts")
 
   // Features: (entity, fts, v, fid); two rows share ts 2024-01-02 10:00:00
@@ -29,12 +31,15 @@ class PointInTimeSpec extends SparkSpec {
     ("a", ts("2024-01-02 10:00:00"), 2.0, 101L), // tie -> fid 101 wins
     ("a", ts("2024-01-05 00:00:00"), 3.0, 102L),
     ("b", ts("2024-01-02 11:00:00"), 9.0, 200L),
-    ("b", ts("2024-01-02 13:00:00"), 8.0, 201L)  // after probe 5 -> excluded
+    ("b", ts("2024-01-02 13:00:00"), 8.0, 201L), // after probe 5 -> excluded
+    (null, ts("2024-01-02 10:00:00"), 4.0, 300L), // null key -> matches nothing
+    ("c", null, 5.0, 400L)                       // null ts -> matches nothing
   ).toDF("entity", "fts", "v", "fid")
 
   private def run(fn: (DataFrame, DataFrame, Seq[String], String, String, Seq[String],
-      Option[String], Seq[String]) => DataFrame): Map[Long, Option[Double]] =
-    fn(entity, feature, Seq("entity"), "event_ts", "fts", Seq("v"), Some("7 DAYS"), Seq("fid"))
+      Option[String], Seq[String]) => DataFrame,
+      ttl: Option[String] = Some("7 DAYS")): Map[Long, Option[Double]] =
+    fn(entity, feature, Seq("entity"), "event_ts", "fts", Seq("v"), ttl, Seq("fid"))
       .select("probe_id", "v").collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
 
@@ -44,15 +49,22 @@ class PointInTimeSpec extends SparkSpec {
     3L -> None,        // stale beyond TTL
     4L -> Some(2.0),   // duplicate-ts tie-break is deterministic
     5L -> Some(9.0),   // entity b, later feature excluded
-    6L -> None         // no features for entity c
+    6L -> None,        // entity c's only feature has no timestamp
+    7L -> None         // null key
   )
+
+  // Without a TTL the stale probe 3 serves a's latest feature; a null key
+  // or a null feature timestamp still matches nothing.
+  private val expectedNoTtl = expected + (3L -> Some(3.0))
 
   test("historicalFeatures (join+rank) matches the spec on every edge") {
     assert(run(PointInTime.historicalFeatures) == expected)
+    assert(run(PointInTime.historicalFeatures, ttl = None) == expectedNoTtl)
   }
 
   test("historicalFeaturesMerge (single-shuffle) is equivalent") {
     assert(run(PointInTime.historicalFeaturesMerge) == expected)
+    assert(run(PointInTime.historicalFeaturesMerge, ttl = None) == expectedNoTtl)
   }
 
   test("TTL boundary is inclusive: feature exactly ttl-old still serves") {

@@ -1,9 +1,9 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.fs.{FeatureStore, OfflineStore, OnlineStore, PointInTime, Registry}
@@ -142,38 +142,6 @@ class StoreFacadeSpec extends SparkSpec {
     (offline, FeatureStore(offline, Registry.defaultRegistry(), tieBreaks = Map("aqi_info" -> Seq("fid"))))
   }
 
-  /** (stages submitted, parquet records read) by `body`'s Spark jobs.
-    * Listener events arrive in order, so once a marker job run after
-    * `body` is seen, every job of `body` has been. */
-  private def sparkWork(body: => Unit): (Int, Long) = {
-    val sc = spark.sparkContext
-    val group = s"work-${System.nanoTime}"
-    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, String]
-    val records = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-        jobGroups.add(g)
-        e.stageIds.foreach(stages.put(_, g))
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (group == stages.get(e.stageId) && e.taskMetrics != null)
-          records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-      while (!jobGroups.contains(s"$group-end") && System.nanoTime < deadline) Thread.sleep(10)
-      assert(jobGroups.contains(s"$group-end"), "listener never saw the marker job")
-      (stages.values.toArray.count(_ == group), records.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("refreshOnline ≡ latestSnapshot of the OfflineStore table after every step") {
     val (offline, store) = offlineStore("graft-facade-refresh")
     val view = "aqi_info_v1"
@@ -247,6 +215,102 @@ class StoreFacadeSpec extends SparkSpec {
     // a small delta folds with the held rows in one partition: one stage, no shuffle
     val (stages, records) = sparkWork(store.refreshOnline("aqi_info_v1"))
     assert(stages == 1 && records == 1, s"a one-row day refreshed in $stages stages reading $records rows")
+  }
+
+  /** 14 days of day-partitioned `aqi_info` history, 2025-05-01..14: key a
+    * at 05:00 and 23:00 each day, b at 12:00, c once at 05-01 05:00; aqi
+    * encodes day and hour. Registry: the default views plus a TTL-less
+    * `aqi_info_nottl` over the same source. */
+  private def fortnight(prefix: String): (OfflineStore, Registry.FeatureRegistry, FeatureStore) = {
+    val offline = OfflineStore(spark, java.nio.file.Files.createTempDirectory(prefix).toString)
+    val rows = for (d <- 1 to 14; (e, h) <- Seq(("a", 5), ("a", 23), ("b", 12)))
+      yield (e, f"2025-05-$d%02d $h%02d:00:00", d * 100.0 + h)
+    land(offline, (rows :+ (("c", "2025-05-01 05:00:00", 1.0))).zipWithIndex
+      .map { case ((e, t, aqi), i) => (e, t, aqi, i.toLong) }: _*)
+    val registry = Registry.defaultRegistry()
+    registry.applyView(registry.view("aqi_info_v1").copy(name = "aqi_info_nottl", ttl = java.time.Duration.ZERO))
+    (offline, registry, FeatureStore(offline, registry, tieBreaks = Map("aqi_info" -> Seq("fid"))))
+  }
+
+  /** The unscoped read: the merge PIT over the whole `offline.read`, view
+    * by view in the facade's (name-sorted) order. */
+  private def unscoped(offline: OfflineStore, registry: Registry.FeatureRegistry,
+      entityDf: org.apache.spark.sql.DataFrame, features: Seq[String]) =
+    registry.resolve(features).toSeq.sortBy(_._1.name).foldLeft(entityDf) { case (acc, (v, fields)) =>
+      PointInTime.historicalFeaturesMerge(acc, offline.read(v.source), v.entity.joinKeys,
+        "event_timestamp", v.timestampField, fields,
+        if (v.ttl.isZero) None else Some(s"${v.ttl.toSeconds} SECONDS"), Seq("fid"))
+    }
+
+  private def byProbe(df: org.apache.spark.sql.DataFrame): Seq[Row] =
+    df.collect().toSeq.sortBy(_.getLong(0))
+
+  private def executedNodes[T](df: org.apache.spark.sql.DataFrame)(
+      pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, T]): Seq[T] =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan)(pf)
+
+  test("a driver-held entity frame's scoped read ≡ the unscoped merge over the whole OfflineStore table") {
+    val (offline, registry, store) = fortnight("graft-facade-scope")
+    def t(s: String) = Timestamp.valueOf(s)
+    val entityDf = Seq(
+      (1L, "a", t("2025-05-10 06:00:00")),
+      (2L, "zz", t("2025-05-10 06:00:00")),   // key absent from history
+      (3L, "a", t("2025-04-20 00:00:00")),    // earlier than all history
+      (4L, "c", t("2025-05-08 05:00:00")),    // exactly TTL after c's only feature: served
+      (5L, "c", t("2025-05-08 05:00:01")),    // one second past it: only the TTL-less view serves
+      (6L, "a", t("2025-05-11 23:30:00")),    // these two span a day boundary
+      (7L, "a", t("2025-05-12 00:30:00")),
+      (8L, null, t("2025-05-10 06:00:00"))    // null key: matches nothing
+    ).toDF("probe_id", "entity_id", "event_timestamp")
+    assert(entityDf.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    for (features <- Seq(refs, Seq("aqi_info_nottl:aqi"), Seq("aqi_info_v1:aqi", "aqi_info_nottl:hour"))) {
+      val got = byProbe(store.getHistoricalFeatures(entityDf, features))
+      assert(got == byProbe(unscoped(offline, registry, entityDf, features)), features)
+    }
+    val twoViews = byProbe(store.getHistoricalFeatures(entityDf, Seq("aqi_info_v1:aqi", "aqi_info_nottl:hour")))
+      .map(r => r.getLong(0) -> (Option(r.getAs[Any]("aqi")), Option(r.getAs[Any]("hour")))).toMap
+    assert(twoViews == Map(
+      1L -> ((Some(1005.0), Some(5))), 2L -> ((None, None)), 3L -> ((None, None)),
+      4L -> ((Some(1.0), Some(5))), 5L -> ((None, Some(5))),
+      6L -> ((Some(1123.0), Some(23))), 7L -> ((Some(1123.0), Some(23))), 8L -> ((None, None))))
+  }
+
+  test("a driver-held entity frame reads only its window's day dirs and shuffles only in-scope rows") {
+    val (offline, registry, store) = fortnight("graft-facade-scope-plan")
+    val entityDf = Seq((1L, "a", Timestamp.valueOf("2025-05-10 06:00:00")),
+      (2L, "a", Timestamp.valueOf("2025-05-10 07:00:00"))).toDF("probe_id", "entity_id", "event_timestamp")
+    val inScope = offline.read("aqi_info").where(col("entity_id") === "a" &&
+      col("feature_timestamp").between(Timestamp.valueOf("2025-05-03 06:00:00"),
+        Timestamp.valueOf("2025-05-10 07:00:00"))).count() + 2
+
+    def read(entity: org.apache.spark.sql.DataFrame) = {
+      val out = store.getHistoricalFeatures(entity, refs)
+      assert(byProbe(out) == byProbe(unscoped(offline, registry, entity, refs)))
+      val days = executedNodes(out) { case f: FileSourceScanExec => f.metrics("numPartitions").value }
+      val shuffled = executedNodes(out) { case e: ShuffleExchangeExec =>
+        e.metrics("shuffleRecordsWritten").value }
+      (days, shuffled.sum)
+    }
+    val (days, shuffled) = read(entityDf)
+    // 05-10 minus the 7-day TTL, widened a day each side: 05-02..05-11
+    assert(days == Seq(10L), s"scoped scan read day dirs $days, expected 10 of 14")
+    assert(shuffled > 0 && shuffled <= inScope, s"shuffled $shuffled rows, in scope $inScope")
+
+    // a distributed entity frame is not scoped: the whole history (43
+    // rows) and the 2 entity rows, which the repartition shuffled once more
+    val (allDays, allShuffled) = read(entityDf.repartition(2))
+    assert(allDays == Seq(14L) && allShuffled == 43 + 2 + 2, s"$allDays days, $allShuffled rows")
+  }
+
+  test("an empty driver-held entity frame reads no feature rows") {
+    val (_, _, store) = fortnight("graft-facade-scope-empty")
+    val empty = Seq.empty[(Long, String, Timestamp)].toDF("probe_id", "entity_id", "event_timestamp")
+    val out = store.getHistoricalFeatures(empty, refs)
+    val (_, records) = sparkWork(assert(out.collect().isEmpty))
+    assert(out.columns.toSeq == Seq("probe_id", "entity_id", "event_timestamp", "hour", "day", "dayOfWeek", "aqi"))
+    val scans = executedNodes(out) { case f: FileSourceScanExec => f }
+    assert(scans.isEmpty && records == 0, s"an empty entity frame scanned $records rows: $scans")
   }
 
   test("multi-view resolution joins each requested view once") {

@@ -48,6 +48,12 @@ class StoreSpec extends SparkSpec {
     val scan = since.queryExecution.executedPlan.collectLeaves().mkString
     assert(scan.contains("year") || since.inputFiles.length == 1)
 
+    // readBetween: both bounds inclusive, pruned the same way
+    val between = store.readBetween("aqi_info", None, java.time.LocalDate.parse("2024-01-01"))
+    assert(between.select("day").as[Int].collect().toSeq == Seq(1))
+    assert(store.readBetween("aqi_info", Some(java.time.LocalDate.parse("2024-01-02")),
+      java.time.LocalDate.parse("2024-01-02")).select("day").as[Int].collect().toSeq == Seq(2))
+
     val next = store.advanceWatermark("aqi_info", all)
     assert(next.contains(java.time.LocalDate.parse("2024-01-03")))
     assert(store.watermark("aqi_info").contains(java.time.LocalDate.parse("2024-01-03")))
@@ -135,6 +141,39 @@ class StoreSpec extends SparkSpec {
     val got = spark.read.option("mergeSchema", "true").parquet(s"${store.root}/t")
       .select("day", "quality_flag").as[(Int, Option[String])].collect().toSet
     assert(got == Set((1, None), (2, Some("ok"))))
+  }
+
+  test("read memoizes the inferred schema: no Spark job until the sampled file changes") {
+    val store = OfflineStore(spark, tmpDir())
+    val path = s"${store.root}/t"
+    store.append("t", Ingest.normalize(raw).where(col("day") === 1))
+    store.append("t", Ingest.normalize(raw).where(col("day") === 2).withColumn("quality_flag", lit("ok")))
+    assert(sparkWork(store.read("t"))._1 > 0, "the first read infers the schema from a footer")
+    var again: org.apache.spark.sql.DataFrame = null
+    val (stages, _) = sparkWork { again = store.read("t") }
+    assert(stages == 0, s"a read with nothing changed ran $stages stages")
+    assert(again.schema == spark.read.parquet(path).schema)
+    // Spark samples the first file in path order: day 1's, without the new column
+    assert(!store.read("t").columns.contains("quality_flag"))
+
+    assert(store.expireOlderThan("t", java.time.LocalDate.of(2024, 1, 2)) == 1)
+    val expired = store.read("t").schema
+    assert(expired.fieldNames.contains("quality_flag"), "expiring the sampled day must re-infer")
+    assert(expired == spark.read.parquet(path).schema)
+  }
+
+  test("read re-infers the schema after compactDay widens the sampled day") {
+    val store = OfflineStore(spark, tmpDir())
+    val path = s"${store.root}/t"
+    val day1 = Ingest.normalize(raw).where(col("day") === 1)
+    store.append("t", day1)
+    store.append("t", Ingest.normalize(raw).where(col("day") === 2))
+    assert(!store.read("t").columns.contains("quality_flag"))
+    store.append("t", day1.withColumn("quality_flag", lit("ok")))
+    store.compactDay("t", java.time.LocalDate.of(2024, 1, 1))
+    val compacted = store.read("t").schema
+    assert(compacted.fieldNames.contains("quality_flag"), "the compacted day's new footer must be sampled")
+    assert(compacted == spark.read.parquet(path).schema)
   }
 
   test("readRawJson multiLine handles the reference's single-array landing format") {
