@@ -2340,36 +2340,15 @@ object Queries {
       .select(col("event_id"), col("__zb_0").as("b_user"),
         col("__zb_1").as("b_ts"), col("zkey"))
 
-  /** TIMESTAMP time travel ([[graft.fs.Layout.readSnapshotAsOf]] — the
-    * r16 What's-missing #4): v0 pins the even-id half, a second commit
-    * appends the rest and re-snapshots, and the as-of read AT v0's
-    * recorded commit timestamp (the inclusive boundary — resolution is
-    * max version with ts ≤ asOf) serves exactly v0's content. The
-    * fixture spins until the clock strictly passes v0's millisecond so
-    * the boundary is deterministic; the oracle is the even-id filter. */
-  private def snapshotAsOfQ(s: SparkSession, dir: String): DataFrame =
-    fixtureMemo.computeIfAbsent(("zasof:" + dir, s), _ => {
-      val base = scratchDir("graft_zasof").toString
-      val e = t(s, dir, "events").select("event_id", "user_id", "value")
-      fs.Layout.writeZordered(e.where(pmod(col("event_id"), lit(2)) === 0),
-        s"$base/z", "user_id", "value", bits = 6, numFiles = 8)
-      val v0 = fs.Layout.snapshotLayout(s, s"$base/z")
-      val ts0 = fs.Layout.snapshotCreatedMs(s, s"$base/z", v0).get
-      while (System.currentTimeMillis() <= ts0) Thread.sleep(1)
-      fs.Layout.appendZordered(e.where(pmod(col("event_id"), lit(2)) === 1),
-        s"$base/z", numFiles = 4)
-      fs.Layout.snapshotLayout(s, s"$base/z")
-      fs.Layout.readSnapshotAsOf(s, s"$base/z", ts0)
-        .select(col("event_id"), col("user_id"), col("value"))
-    })
-
   /** COMMIT-LOG time travel ([[graft.fs.OptimisticCommit.readCommitAsOf]]
-    * — the r17 verdict's What's-missing #2 closed): the plain-API build
-    * (v0) and append (v1) record commits WITHOUT any snapshotLayout
-    * call — every mutation is a readable version since r18 — and the
-    * as-of read AT v0's completion millisecond serves exactly v0's
-    * content (inclusive boundary, version-order tie-break). Same
-    * deterministic clock spin as q_snapshot_asof; the oracle is the
+    * — the r17 verdict's What's-missing #2 closed; registered as both
+    * q_snapshot_asof and q_commit_asof, since the commit log is the
+    * layout's one time-travel mechanism): the plain-API build (v0) and
+    * append (v1) record commits — every mutation is a readable version
+    * since r18 — and the as-of read AT v0's completion millisecond
+    * serves exactly v0's content (inclusive boundary, version-order
+    * tie-break). The fixture spins until the clock strictly passes v0's
+    * millisecond so the boundary is deterministic; the oracle is the
     * even-id filter. */
   private def commitAsOfQ(s: SparkSession, dir: String): DataFrame =
     fixtureMemo.computeIfAbsent(("zcommit:" + dir, s), _ => {
@@ -2789,13 +2768,13 @@ object Queries {
         .select(col("event_id"), col("user_id"), col("value"))
     })
 
-  /** TIME TRAVEL ([[graft.fs.Layout.snapshotLayout]]/[[graft.fs.Layout.readSnapshot]])
-    * — snapshot v0 pins the 2-epoch state; the table then moves on (two
-    * more epochs land, a whole user is logically deleted) and the
-    * snapshot read must still serve EXACTLY the pinned state: epochs
-    * 0-1, user 7 intact. The oracle is the epoch-membership filter the
-    * current table can no longer satisfy — the proof the read actually
-    * time-travels. */
+  /** TIME TRAVEL ([[graft.fs.OptimisticCommit.readCommit]]) — commit
+    * v0, the build plus the first append, pins the 2-epoch state; the
+    * table then moves on (two more epochs land, a whole user is
+    * logically deleted) and the keyed read of v0 must still serve
+    * EXACTLY the pinned state: epochs 0-1, user 7 intact. The oracle is
+    * the epoch-membership filter the current table can no longer
+    * satisfy — the proof the read actually time-travels. */
   private def layoutSnapshotQ(s: SparkSession, dir: String): DataFrame =
     fixtureMemo.computeIfAbsent(("zsnapq:" + dir, s), _ => {
       val base = scratchDir("graft_zsnapq").toString
@@ -2804,13 +2783,13 @@ object Queries {
         s"$base/z", Seq("user_id", "value"), bits = 6, numFiles = 8)
       fs.Layout.appendZorderedEpoch(e.where(pmod(col("event_id"), lit(4)) === 1),
         s"$base/z", 1, numFiles = 4)
-      val v0 = fs.Layout.snapshotLayout(s, s"$base/z", Some("event_id"))
+      val v0 = fs.OptimisticCommit.latestCompletedVersion(s, s"$base/z").get
       for (r <- 2 to 3)
         fs.Layout.appendZorderedEpoch(e.where(pmod(col("event_id"), lit(4)) === r),
           s"$base/z", r, numFiles = 4)
       fs.Layout.deleteLogical(s, s"$base/z",
         e.where(col("user_id") === 7).select("event_id"), "event_id")
-      fs.Layout.readSnapshot(s, s"$base/z", v0, Some("event_id"))
+      fs.OptimisticCommit.readCommit(s, s"$base/z", v0, Some("event_id"))
         .where(col("user_id").between(5, 11) &&
           col("value").between(10.0, 60.0))
         .select(col("event_id"), col("user_id"), col("value"))
@@ -2909,24 +2888,24 @@ object Queries {
       Seq((sm.get.longValueExact(), n)).toDF("sum_uid", "cnt")
     })
 
-  /** Snapshot-to-snapshot CHANGE DATA FEED
+  /** Version-to-version CHANGE DATA FEED
     * ([[graft.fs.Layout.snapshotDiff]]) — the read an incremental
-    * consumer runs instead of re-reading the table: snapshot the built
-    * layout, stage a window of logical upserts (updates + inserts) and
-    * a takedown batch (merge-on-read — no data files move, so both
-    * snapshots stay readable), snapshot again, and diff. The natural
-    * CDC cadence makes the FAST PATH eligible (same pinned file list,
-    * clean older snapshot), so the change set assembles from the pinned
-    * sidecars at cost ∝ changes; the oracle replays the three change
-    * classes (update/insert/delete, takedown-wins on the overlap) from
-    * the mutation predicates. */
+    * consumer runs instead of re-reading the table: pin the build's
+    * commit version, stage a window of logical upserts (updates +
+    * inserts) and a takedown batch (merge-on-read — no data files move,
+    * so both versions stay readable), pin the latest version again, and
+    * diff. The natural CDC cadence makes the FAST PATH eligible (same
+    * pinned file list, no sidecar pinned by the older version), so the
+    * change set assembles from the pinned sidecars at cost ∝ changes;
+    * the oracle replays the three change classes (update/insert/delete,
+    * takedown-wins on the overlap) from the mutation predicates. */
   private def snapshotDiffQ(s: SparkSession, dir: String): DataFrame =
     fixtureMemo.computeIfAbsent(("zdiff:" + dir, s), _ => {
       val base = scratchDir("graft_zdiff").toString
       val e = t(s, dir, "events").select("event_id", "user_id", "value")
       fs.Layout.writeZordered(e, s"$base/z", "user_id", "value",
         bits = 6, numFiles = 8)
-      val v0 = fs.Layout.snapshotLayout(s, s"$base/z", Some("event_id"))
+      val v0 = fs.OptimisticCommit.latestCompletedVersion(s, s"$base/z").get
       val upd = e.where(pmod(col("event_id"), lit(97)) === 0)
         .withColumn("value", col("value") + lit(1000.0))
       val ins = e.where(pmod(col("event_id"), lit(101)) === 0)
@@ -2936,7 +2915,7 @@ object Queries {
       fs.Layout.deleteLogical(s, s"$base/z",
         e.where(pmod(col("event_id"), lit(103)) === 0).select("event_id"),
         "event_id")
-      val v1 = fs.Layout.snapshotLayout(s, s"$base/z", Some("event_id"))
+      val v1 = fs.OptimisticCommit.latestCompletedVersion(s, s"$base/z").get
       fs.Layout.snapshotDiff(s, s"$base/z", v0, v1, "event_id")
     })
 
@@ -4268,7 +4247,7 @@ object Queries {
     "q_meta_ndv" -> (metaNdvQ _),
     "q_meta_quantile" -> (metaQuantileQ _),
     "q_snapshot_diff" -> (snapshotDiffQ _),
-    "q_snapshot_asof" -> (snapshotAsOfQ _),
+    "q_snapshot_asof" -> (commitAsOfQ _),
     "q_commit_asof" -> (commitAsOfQ _),
     "q_sql_pruned_scan" -> (sqlPrunedScanQ _),
     "q_sql_commit_asof" -> (sqlCommitAsOfQ _),

@@ -1077,7 +1077,8 @@ object ScaleProbe {
         }
       }
     }
-    // Round-15h: the snapshot CDC diff — fast path vs the general join
+    // Round-15h: the CDC diff between commit versions — fast path vs the
+    // general join
     if (inSection("r15h")) {
       import org.apache.spark.sql.functions.{col, lit, pmod}
       val big = graft.Queries.readEvents(spark, "/tmp/sfbig")
@@ -1088,14 +1089,16 @@ object ScaleProbe {
           bits = 6, numFiles = 64, sampleBy = Some(("event_id", 8)))
         0L
       }
-      val v0 = graft.fs.Layout.snapshotLayout(spark, s"$base/z", Some("event_id"))
+      val v0 = graft.fs.OptimisticCommit
+        .latestCompletedVersion(spark, s"$base/z").get
       val upd = big.where(pmod(col("event_id"), lit(997L)) === 7L)
         .withColumn("value", col("value") + lit(1.0))
       graft.fs.Layout.upsertLogical(spark, s"$base/z", upd, "event_id")
       graft.fs.Layout.deleteLogical(spark, s"$base/z",
         big.where(pmod(col("event_id"), lit(997L)) === 11L).select("event_id"),
         "event_id")
-      val v1 = graft.fs.Layout.snapshotLayout(spark, s"$base/z", Some("event_id"))
+      val v1 = graft.fs.OptimisticCommit
+        .latestCompletedVersion(spark, s"$base/z").get
       timed("snapshotDiff FAST (sidecar-assembled, cost ∝ changes)")(
         graft.fs.Layout.snapshotDiff(spark, s"$base/z", v0, v1, "event_id")
           .count())

@@ -106,17 +106,6 @@ object Expressions {
   def exactAvg4(cents: Column, n: Column): Column =
     call_function("div", cents * 200 + n, n * 2).cast("double") / 10000.0
 
-  /** Calendar feature columns from a timestamp column. dayOfWeek follows the
-    * Spark convention (1=Sunday..7=Saturday) — the canonical choice documented
-    * in SURVEY.md §1.4; session timezone is fixed UTC. */
-  def calendarColumns(ts: Column): Map[String, Column] = Map(
-    "hour" -> hour(ts),
-    "day" -> dayofmonth(ts),
-    "dayOfWeek" -> dayofweek(ts),
-    "year" -> year(ts),
-    "month" -> month(ts)
-  )
-
   /** Opaque-UDF twin of [[aqiPm25]] for parity testing only (§2.9 U1): the
     * reference computes AQI via a Python UDF (write_to_bigquery.py:91-108);
     * this is the JVM equivalent, used to differential-test the codegen'd

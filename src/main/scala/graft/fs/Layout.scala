@@ -2374,7 +2374,7 @@ object Layout {
     * a fresh [[writeManifest]] naming it (files predating the column
     * then carry null bounds and are skipped by every range on it,
     * which is exactly SQL's null-never-matches). All pruned/point/
-    * snapshot reads also merge schemas, so a candidate set spanning
+    * commit-pinned reads also merge schemas, so a candidate set spanning
     * old and new epochs serves the union schema consistently. Renames
     * and type changes are NOT supported — that is rewrite territory. */
   def readLayout(spark: org.apache.spark.sql.SparkSession,
@@ -2514,14 +2514,6 @@ object Layout {
     }
   }
 
-  /** Apply `df`'s pending tombstones: broadcast anti-join (the
-    * tombstone set is feed-sized by contract — [[applyTombstones]] on
-    * compaction cadence is what KEEPS it feed-sized). */
-  def subtractTombstones(spark: org.apache.spark.sql.SparkSession,
-      path: String, df: DataFrame, keyCol: String): DataFrame =
-    df.join(broadcast(readTombstones(spark, path, keyCol)), Seq(keyCol),
-      "left_anti")
-
   /** Delta-row sidecar path — keyed logical UPSERTS for `keyCol`. */
   def deltaPath(path: String, keyCol: String): String =
     path.stripSuffix("/") + s"__deltas_$keyCol"
@@ -2587,47 +2579,91 @@ object Layout {
     }
   }
 
-  /** The standing delta set for `keyCol` (rows + `__seq`, the staging
-    * epoch id — a partition column on the live sidecar, a plain column
-    * on a post-purge rewrite or a snapshot copy; cast to long either
-    * way), or None when no upserts are pending. */
+  /** The standing delta set for `keyCol` ([[deltaFrame]] of the live
+    * sidecar), or None when no upserts are pending. */
   def readDeltas(spark: org.apache.spark.sql.SparkSession, path: String,
       keyCol: String): Option[DataFrame] = {
     val dPath = deltaPath(path, keyCol)
     AtomicDir.recoverSwap(spark, dPath)
-    if (sidecarExists(spark, dPath))
-      // mergeSchema: a later delta batch may carry an evolved column the
-      // earlier staged epochs lack (the additive-evolution convention
-      // holds for the sidecar too)
-      Some(spark.read.option("mergeSchema", "true").parquet(dPath)
-        .withColumnRenamed("seq", "__seq")
-        .withColumn("__seq", col("__seq").cast("long")))
+    if (sidecarExists(spark, dPath)) Some(deltaFrame(spark, path, keyCol, None))
     else None
   }
 
-  /** Fold `df`'s pending upsert deltas: rows whose key has a staged
-    * replacement drop (broadcast anti-join — the delta set is feed-sized
-    * by contract, [[applyUpsertDeltas]] keeps it so) and the LATEST
-    * staged version of each key unions in, filtered by the read's own
-    * residual predicate `resid` so a pruned/point read serves exactly
-    * what the full-scan-with-predicate over the logical table would.
-    * Null-key staged rows are pure inserts and union verbatim (post-
-    * `resid`). Column sets reconcile by name with null backfill — a
-    * delta batch may carry an evolved column the base files predate and
-    * vice versa, the additive-evolution convention. */
-  private def applyDeltasTo(spark: org.apache.spark.sql.SparkSession,
-      path: String, df: DataFrame, keyCol: String, resid: Column): DataFrame =
-    readDeltas(spark, path, keyCol) match {
-      case None => df
-      case Some(d) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(keyCol)).orderBy(col("__seq").desc)
-        val latest = d
-          .withColumn("__rn", row_number().over(w))
-          .where(col("__rn") === 1).drop("__rn", "__seq")
-        df.join(broadcast(latest.select(col(keyCol))), Seq(keyCol), "left_anti")
-          .unionByName(latest.where(resid), allowMissingColumns = true)
+  /** THE delta-frame reader: staged rows plus `__seq`, the staging epoch
+    * id read off the `seq=<n>` partition dirs and cast to long — over the
+    * live sidecar, or over `pinned`, a commit's listing of its files
+    * (`basePath` restores the partition column a file list loses).
+    * mergeSchema: a later delta batch may carry an evolved column the
+    * earlier staged epochs lack (the additive-evolution convention holds
+    * for the sidecar too). */
+  private def deltaFrame(spark: org.apache.spark.sql.SparkSession,
+      path: String, keyCol: String, pinned: Option[Seq[String]]): DataFrame = {
+    val dPath = deltaPath(path, keyCol)
+    val reader = spark.read.option("mergeSchema", "true")
+    pinned.fold(reader.parquet(dPath))(fs =>
+      reader.option("basePath", dPath).parquet(fs: _*))
+      .withColumnRenamed("seq", "__seq")
+      .withColumn("__seq", col("__seq").cast("long"))
+  }
+
+  /** Commit `version`'s pinned merge-on-read state for `keyCol` as
+    * (deltas, tombstones) frames — None where the commit pinned no file
+    * of that kind. The file lists come validated from
+    * [[OptimisticCommit.commitSidecarFiles]] (a mid-flight, aborted or
+    * expired version refuses there). */
+  private[graft] def pinnedMor(spark: org.apache.spark.sql.SparkSession,
+      path: String, version: Long, keyCol: String)
+      : (Option[DataFrame], Option[DataFrame]) = {
+    val (deltaFiles, tombFiles) =
+      OptimisticCommit.commitSidecarFiles(spark, path, version, keyCol)
+    (Option.when(deltaFiles.nonEmpty)(
+      deltaFrame(spark, path, keyCol, Some(deltaFiles))),
+      Option.when(tombFiles.nonEmpty)(
+        spark.read.parquet(tombFiles: _*).select(col(keyCol))))
+  }
+
+  /** Latest-wins: the highest-`__seq` staged row of each key, `__seq`
+    * dropped. */
+  private def latestDeltas(d: DataFrame, keyCol: String): DataFrame =
+    d.withColumn("__rn", row_number().over(org.apache.spark.sql.expressions
+        .Window.partitionBy(col(keyCol)).orderBy(col("__seq").desc)))
+      .where(col("__rn") === 1).drop("__rn", "__seq")
+
+  /** `df` minus the rows whose key is in `keys` — a broadcast anti-join
+    * (tombstone sets are feed-sized by contract; [[applyTombstones]] on
+    * compaction cadence is what KEEPS them feed-sized). */
+  private def subtractKeys(df: DataFrame, keys: DataFrame,
+      keyCol: String): DataFrame =
+    df.join(broadcast(keys.select(col(keyCol))), Seq(keyCol), "left_anti")
+
+  /** THE merge-on-read fold, for the live reads and the commit-pinned
+    * ones alike: rows whose key has a staged replacement drop, the
+    * LATEST staged version of each key unions in (filtered by the read's
+    * own residual predicate `resid`, so a pruned/point read serves
+    * exactly what the full scan with that predicate over the logical
+    * table would), and the tombstoned keys subtract LAST — a key both
+    * upserted and tombstoned answers EMPTY whatever the staging order
+    * (the takedown wins: an update must not resurrect a deleted row).
+    * Column sets reconcile by name with null backfill — a delta batch
+    * may carry an evolved column the base files predate and vice versa,
+    * the additive-evolution convention. */
+  private[graft] def foldMor(df: DataFrame, deltas: Option[DataFrame],
+      tombstones: Option[DataFrame], keyCol: String,
+      resid: Column = lit(true)): DataFrame = {
+    val withDeltas = deltas.fold(df) { d =>
+      val latest = latestDeltas(d, keyCol)
+      subtractKeys(df, latest, keyCol)
+        .unionByName(latest.where(resid), allowMissingColumns = true)
     }
+    tombstones.fold(withDeltas)(subtractKeys(withDeltas, _, keyCol))
+  }
+
+  /** The live serve paths' fold: [[foldMor]] of the standing sidecars
+    * (callers check the key fence, [[requireMorKeyCovers]], first). */
+  private def liveMor(spark: org.apache.spark.sql.SparkSession, path: String,
+      df: DataFrame, keyCol: String, resid: Column): DataFrame =
+    foldMor(df, readDeltas(spark, path, keyCol),
+      Some(readTombstones(spark, path, keyCol)), keyCol, resid)
 
   /** Every STANDING MoR sidecar of the table, as (kind, keyCol) pairs —
     * committed epochs only, discovered by the naming conventions in the
@@ -2681,10 +2717,7 @@ object Layout {
     val resid = ranges.map { case (c, lo, hi) =>
       col(c) >= lit(lo) && col(c) <= lit(hi)
     }.reduce(_ && _)
-    subtractTombstones(spark, path,
-      applyDeltasTo(spark, path, prunedRead(spark, path, ranges), keyCol,
-        resid),
-      keyCol)
+    liveMor(spark, path, prunedRead(spark, path, ranges), keyCol, resid)
   }
 
   /** Merge-on-read point read: the value-index lookup as usual, plus
@@ -2694,11 +2727,8 @@ object Layout {
   def pointReadMor(spark: org.apache.spark.sql.SparkSession, path: String,
       keyCol: String, value: Column, buckets: Int = 1 << 16): DataFrame = {
     requireMorKeyCovers(spark, path, keyCol)
-    subtractTombstones(spark, path,
-      applyDeltasTo(spark, path,
-        pointRead(spark, path, keyCol, value, buckets), keyCol,
-        col(keyCol) === value),
-      keyCol)
+    liveMor(spark, path, pointRead(spark, path, keyCol, value, buckets),
+      keyCol, col(keyCol) === value)
   }
 
   /** Full-table merge-on-read read: every leaf row (served under the
@@ -2710,12 +2740,10 @@ object Layout {
   def readLayoutMor(spark: org.apache.spark.sql.SparkSession, path: String,
       keyCol: String): DataFrame = {
     requireMorKeyCovers(spark, path, keyCol)
-    subtractTombstones(spark, path,
-      applyDeltasTo(spark, path,
-        readLayoutFiles(spark, path,
-          listedDataFilePaths(spark, path).values.toSeq.sorted),
-        keyCol, lit(true)),
-      keyCol)
+    liveMor(spark, path,
+      readLayoutFiles(spark, path,
+        listedDataFilePaths(spark, path).values.toSeq.sorted),
+      keyCol, lit(true))
   }
 
   /** FOLD pending upsert deltas back to copy-on-write — the
@@ -2738,18 +2766,13 @@ object Layout {
         recoverLayout(spark, path)
         refreshLayoutIndexes(spark, path, manifestCols, keyCol, buckets,
           allowGone = true)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(keyCol)).orderBy(col("__seq").desc)
         // takedown wins across sidecars: a key both staged and
         // tombstoned must not be resurrected by the fold (the serve
-        // path's rule, [[prunedReadMor]]); [[applyTombstones]] holds the
+        // path's rule, [[foldMor]]); [[applyTombstones]] holds the
         // same invariant from its side by purging its keys out of this
         // sidecar before clearing its own
-        val latest = d
-          .withColumn("__rn", row_number().over(w))
-          .where(col("__rn") === 1).drop("__rn", "__seq")
-          .join(broadcast(readTombstones(spark, path, keyCol)), Seq(keyCol),
-            "left_anti")
+        val latest = subtractKeys(latestDeltas(d, keyCol),
+          readTombstones(spark, path, keyCol), keyCol)
         val res = upsertByKey(spark, path, latest, keyCol, buckets, numFiles)
         refreshLayoutIndexes(spark, path, manifestCols, keyCol, buckets,
           allowGone = true)
@@ -2791,7 +2814,7 @@ object Layout {
     // taken-down key from its staged update. Before the tombstone clear,
     // so a crash between the two re-purges harmlessly on the re-run.
     readDeltas(spark, path, keyCol).foreach { d =>
-      val kept = d.join(broadcast(ts), Seq(keyCol), "left_anti")
+      val kept = subtractKeys(d, ts, keyCol)
       val dp = new org.apache.hadoop.fs.Path(deltaPath(path, keyCol))
       if (kept.isEmpty)
         dp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2834,283 +2857,59 @@ object Layout {
         "serve path)")
   }
 
-  /** Snapshot root convention — sibling of the data, like every index. */
-  def snapshotsPath(path: String): String =
-    path.stripSuffix("/") + "__snapshots"
-
-  /** SNAPSHOT (time travel): pin the table's CURRENT state as version
-    * `v` — the live file list plus, when `keyCol` is given, a COPY of
-    * the standing tombstone set (so a snapshot taken between a logical
-    * delete and its fold serves the deleted-at-snapshot-time view, and
-    * a snapshot taken before serves the pre-delete view — merge-on-read
-    * and time travel compose). The snapshot is metadata only (one tiny
-    * parquet of file URIs): appends/new epochs leave old snapshots
-    * intact (their files still exist), and the HONEST expiry contract
-    * is physical: a copy-on-write delete, compaction, or
-    * [[applyTombstones]] rewrites files, and any snapshot pinning a
-    * rewritten file EXPIRES — [[readSnapshot]] refuses loudly, never
-    * serves a partial state. That is the trade every table format
-    * makes (Iceberg's expire-snapshots/vacuum); keeping snapshots
-    * serveable across rewrites means retaining the old files, i.e.
-    * deferring the rewrite — compose with tombstones for that.
-    * Commit is a single dir rename (build under a hidden tmp, rename
-    * to `v=<n>`); stray tmps from crashed snapshots are swept at the
-    * next call. Returns the new version number. */
-  def snapshotLayout(spark: org.apache.spark.sql.SparkSession, path: String,
-      keyCol: Option[String] = None): Long = {
-    val root = new org.apache.hadoop.fs.Path(snapshotsPath(path))
-    val hfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    hfs.mkdirs(root)
-    for (st <- hfs.listStatus(root); if st.getPath.getName.startsWith(".tmp_v="))
-      hfs.delete(st.getPath, true)
-    val v = listSnapshots(spark, path).foldLeft(-1L)(math.max) + 1L
-    val tmp = new org.apache.hadoop.fs.Path(root, s".tmp_v=$v")
-    val files = listedDataFilePaths(spark, path).values.toSeq.sorted
-    import spark.implicits._
-    files.toDF("file").coalesce(1).write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(tmp, "files").toString)
-    keyCol.foreach { c =>
-      readTombstones(spark, path, c).coalesce(1).write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(tmp, s"tombstones_$c").toString)
-      // pending upsert deltas pin too — a snapshot between a logical
-      // upsert and its fold serves the upserted-at-snapshot-time view
-      readDeltas(spark, path, c).foreach(_.coalesce(1).write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(tmp, s"deltas_$c").toString))
-    }
-    // the commit timestamp — what [[readSnapshotAsOf]] resolves against;
-    // recorded INSIDE the tmp so the rename keeps (files, sidecar pins,
-    // timestamp) one atomic unit. Wall-clock epoch millis: commit times
-    // need no cross-engine determinism, only monotone-enough ordering
-    // for time travel (version order remains the authoritative order —
-    // resolution picks the max VERSION with ts <= asOf).
-    locally {
-      val out = hfs.create(new org.apache.hadoop.fs.Path(tmp, "created_ms"), true)
-      try out.write(System.currentTimeMillis().toString.getBytes("UTF-8"))
-      finally out.close()
-    }
-    val dst = new org.apache.hadoop.fs.Path(root, s"v=$v")
-    if (!hfs.rename(tmp, dst)) {
-      hfs.delete(tmp, true)
-      throw new java.io.IOException(
-        if (hfs.exists(dst))
-          s"concurrent snapshotLayout detected: v=$v was committed by " +
-            "another writer while this snapshot was building — the layout " +
-            "is single-writer (serialize via withWriterLease); retry to " +
-            "pin a fresh version"
-        else s"snapshot commit rename $tmp -> $dst failed")
-    }
-    v
-  }
-
-  /** The committed snapshot versions for `path`, unsorted. */
-  def listSnapshots(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(snapshotsPath(path))
-    val hfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hfs.exists(root)) Seq.empty
-    else hfs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-  }
-
-  /** TIME-TRAVEL read of snapshot `version`: exactly the rows the table
-    * held when the snapshot was taken — the pinned file list, minus the
-    * pinned tombstone set if one was captured. Refuses loudly when any
-    * pinned file has been physically rewritten since (the expiry
-    * contract in [[snapshotLayout]]); a partial historical answer is a
-    * wrong answer. */
-  def readSnapshot(spark: org.apache.spark.sql.SparkSession, path: String,
-      version: Long, keyCol: Option[String] = None): DataFrame = {
-    val vDir = new org.apache.hadoop.fs.Path(snapshotsPath(path), s"v=$version")
-    val hfs = vDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(hfs.exists(vDir),
-      s"no snapshot v=$version for $path (have ${listSnapshots(spark, path).sorted.mkString(", ")})")
-    val files = spark.read
-      .parquet(new org.apache.hadoop.fs.Path(vDir, "files").toString)
-      .collect().map(_.getString(0)).sorted
-    val live = listedDataFiles(spark, path)
-    val gone = files.map(f => f.substring(f.lastIndexOf('/') + 1))
-      .filterNot(live)
-    require(gone.isEmpty,
-      s"snapshot v=$version expired: ${gone.length} pinned file(s) were " +
-        s"physically rewritten since (${gone.take(3).mkString(", ")}) — " +
-        "copy-on-write deletes, compaction, and applyTombstones expire " +
-        "snapshots; serve the live table or re-snapshot")
-    val data =
-      if (files.isEmpty)
-        // zero pinned files: empty rows WITH the live table's schema, so
-        // the tombstone anti-join and downstream projections still
-        // resolve (a schemaless emptyDataFrame would throw on both)
-        readLayout(spark, path).limit(0)
-      else spark.read.option("mergeSchema", "true")
-        .parquet(files.toIndexedSeq: _*)
-    keyCol match {
-      case Some(c) =>
-        val dPath = new org.apache.hadoop.fs.Path(vDir, s"deltas_$c")
-        val withDeltas =
-          if (!hfs.exists(dPath)) data
-          else {
-            // the pinned delta fold — latest staged version per key at
-            // snapshot time replaces, unseen keys insert
-            val d = spark.read.parquet(dPath.toString)
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col(c)).orderBy(col("__seq").desc)
-            val latest = d.withColumn("__rn", row_number().over(w))
-              .where(col("__rn") === 1).drop("__rn", "__seq")
-            data.join(broadcast(latest.select(col(c))), Seq(c), "left_anti")
-              .unionByName(latest, allowMissingColumns = true)
-          }
-        val tPath = new org.apache.hadoop.fs.Path(vDir, s"tombstones_$c")
-        if (hfs.exists(tPath))
-          withDeltas.join(broadcast(spark.read.parquet(tPath.toString)),
-            Seq(c), "left_anti")
-        else withDeltas
-      case None => data
-    }
-  }
-
-  /** A snapshot's recorded commit timestamp (epoch millis) — None for a
-    * legacy snapshot taken before timestamp recording. */
-  def snapshotCreatedMs(spark: org.apache.spark.sql.SparkSession,
-      path: String, version: Long): Option[Long] = {
-    val f = new org.apache.hadoop.fs.Path(snapshotsPath(path),
-      s"v=$version/created_ms")
-    val hfs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hfs.exists(f)) None
-    else {
-      val in = hfs.open(f)
-      try Some(new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toLong)
-      finally in.close()
-    }
-  }
-
-  /** Resolve "the table AS OF `tsMs`" to a snapshot version — the
-    * time-travel form users reach for first (the r16 verdict's What's
-    * missing #4; version pinning stays the exact form): among snapshots
-    * with a recorded commit timestamp ≤ `tsMs`, the one with the
-    * HIGHEST VERSION wins (version order is the commit order — wall
-    * clocks need not be monotone, and an exact-timestamp ask resolves
-    * to that commit, the inclusive convention every table format uses).
-    * Refuses loudly naming the available range when `tsMs` predates the
-    * first recorded snapshot (serving the oldest would silently
-    * time-travel FORWARD of the ask), and when no snapshot records a
-    * timestamp at all (legacy snapshots resolve by version only). */
-  def resolveSnapshotAsOf(spark: org.apache.spark.sql.SparkSession,
-      path: String, tsMs: Long): Long = {
-    val stamped = listSnapshots(spark, path).sorted
-      .flatMap(v => snapshotCreatedMs(spark, path, v).map(v -> _))
-    require(stamped.nonEmpty,
-      s"no timestamp-resolvable snapshots for $path — snapshots predate " +
-        "commit-timestamp recording (or none exist); pin by version with " +
-        "readSnapshot, or take a fresh snapshotLayout")
-    val eligible = stamped.filter(_._2 <= tsMs)
-    require(eligible.nonEmpty, {
-      val lo = stamped.minBy(_._2)._2
-      val hi = stamped.maxBy(_._2)._2
-      s"as-of $tsMs predates every snapshot of $path (recorded range " +
-        s"[$lo, $hi], ${stamped.size} snapshot(s)) — serving the oldest " +
-        "would time-travel forward of the ask; pass a timestamp in range " +
-        s"or pin v=${stamped.head._1} explicitly"
-    })
-    eligible.map(_._1).max
-  }
-
-  /** TIME-TRAVEL read by timestamp: [[readSnapshot]] of
-    * [[resolveSnapshotAsOf]]'s version — same expiry/refusal contract. */
-  def readSnapshotAsOf(spark: org.apache.spark.sql.SparkSession,
-      path: String, tsMs: Long, keyCol: Option[String] = None): DataFrame =
-    readSnapshot(spark, path, resolveSnapshotAsOf(spark, path, tsMs), keyCol)
-
-  /** Drop snapshot `version` — the expire/vacuum step that releases the
-    * pin (metadata only; data files belong to the live table). */
-  def expireSnapshot(spark: org.apache.spark.sql.SparkSession, path: String,
-      version: Long): Boolean = {
-    val vDir = new org.apache.hadoop.fs.Path(snapshotsPath(path), s"v=$version")
-    val hfs = vDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    hfs.delete(vDir, true)
-  }
-
-  /** RETENTION SWEEP — drop every snapshot but the newest `keep` (the
-    * cron twin of [[expireSnapshot]]; keeping snapshots forever pins
-    * nothing physically — expiry here is metadata-only — but each one
-    * is a standing promise [[readSnapshot]] must honor or refuse, and
-    * the CoW mutations that expire them loudly get noisier the longer
-    * stale pins linger). Returns the dropped versions. */
-  def expireSnapshotsKeepLast(spark: org.apache.spark.sql.SparkSession,
-      path: String, keep: Int): Seq[Long] = {
-    require(keep >= 0, s"keep must be >= 0, got $keep")
-    val drop = listSnapshots(spark, path).sorted.dropRight(keep)
-    drop.foreach(expireSnapshot(spark, path, _))
-    drop
-  }
-
-  /** CHANGE-DATA-FEED between two snapshots — every key whose row
+  /** CHANGE-DATA-FEED between two commit versions — every key whose row
     * changed from `v1` to `v2`, as (key, change ∈ insert/delete/update,
     * `<c>_before`, `<c>_after` per data column): the read an incremental
     * consumer runs instead of re-reading the table (the audit read a
-    * takedown regulator asks for). Works on any pair of readable
-    * snapshots; the natural cadence is the MoR loop's — fold, snapshot,
-    * stage a window of logical upserts/takedowns, snapshot, diff — since
-    * MoR staging moves no data files, both snapshots stay readable (a
-    * copy-on-write mutation between them expires v1, the standing
-    * physical-expiry contract).
+    * takedown regulator asks for). `v1` and `v2` are commit-log versions
+    * ([[OptimisticCommit]]: every plain-API mutation records one) and
+    * must both be readable — an expired (rewritten or swept), mid-flight
+    * or aborted version refuses loudly, as [[OptimisticCommit.readCommit]]
+    * does. The natural cadence is the MoR loop's — fold, stage a window
+    * of logical upserts/takedowns, diff the version before the window
+    * against the one after — since MoR staging moves no data files, both
+    * versions stay readable (a copy-on-write mutation between them
+    * expires v1, the standing physical-expiry contract).
     *
-    * Two plans, chosen by what the snapshots pin:
-    *  - FAST PATH (the CDC-feed shape): both snapshots pin the SAME file
-    *    list and v1 pins no sidecar state — then every change is in v2's
-    *    pinned sidecars, the changed-key set is feed-sized by the MoR
-    *    contract, and the diff assembles from ONE broadcast-semi-joined
-    *    pass over the pinned base (no shuffle, no second scan): cost ∝
-    *    changes, not table.
-    *  - GENERAL PATH: full-outer join of the two snapshot reads on the
-    *    key — two scans + one key shuffle, the honest audit price for
-    *    arbitrary snapshot pairs (spec-pinned identical to the fast
+    * Two plans, chosen by what the two versions pin:
+    *  - FAST PATH (the CDC-feed shape): both versions pin the SAME data
+    *    files and v1 pins no sidecar files for `keyCol` — then every
+    *    change is in v2's pinned sidecars, the changed-key set is
+    *    feed-sized by the MoR contract, and the diff assembles from ONE
+    *    broadcast-semi-joined pass over the pinned base (no shuffle, no
+    *    second scan): cost ∝ changes, not table.
+    *  - GENERAL PATH: full-outer join of the two versions' keyed reads
+    *    on the key — two scans + one key shuffle, the honest audit price
+    *    for arbitrary version pairs (spec-pinned identical to the fast
     *    path on fast-path-eligible fixtures).
     *
     * Both sides must be key-unique and null-free on `keyCol` (checked —
     * one aggregate per side on the general path; the MoR sidecar
     * contracts already guarantee it on the fast path). A staged no-op
     * update (delta identical to the stored row) is NOT a change. Schema
-    * evolution between the snapshots aligns by name — a column absent
+    * evolution between the versions aligns by name — a column absent
     * on one side reads null there, the additive-evolution convention. */
   def snapshotDiff(spark: org.apache.spark.sql.SparkSession, path: String,
       v1: Long, v2: Long, keyCol: String,
       broadcastKeyCap: Long = 2L * 1000 * 1000): DataFrame = {
-    val sp = snapshotsPath(path)
-    val hfs = new org.apache.hadoop.fs.Path(sp)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def pinned(v: Long): Seq[String] = spark.read
-      .parquet(new org.apache.hadoop.fs.Path(sp, s"v=$v/files").toString)
-      .collect().map(_.getString(0)).toSeq.sorted
-    def sidecar(v: Long, kind: String): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(sp, s"v=$v/${kind}_$keyCol")
-      if (hfs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-    }
-    def empty(df: Option[DataFrame]): Boolean = df.forall(_.isEmpty)
+    val files1 = OptimisticCommit.commitDataFiles(spark, path, v1)
+    val (deltaFiles1, tombFiles1) =
+      OptimisticCommit.commitSidecarFiles(spark, path, v1, keyCol)
+    val sameBase = files1 == OptimisticCommit.commitDataFiles(spark, path, v2) &&
+      deltaFiles1.isEmpty && tombFiles1.isEmpty
+    if (!sameBase) return snapshotDiffGeneral(spark, path, v1, v2, keyCol)
+    val (deltas2, tombs2) = pinnedMor(spark, path, v2, keyCol)
     // the fast path broadcasts the changed-key and tombstone sets to the
     // driver — feed-sized by the MoR contract, but a large churn window
-    // between snapshots can break that assumption, so size-check the
+    // between versions can break that assumption, so size-check the
     // sidecars (a count over the tiny sidecar parquet, not the table)
     // and take the shuffle-safe general path above the cap rather than
     // risking a driver-side broadcast OOM
-    def feedSized(v: Long): Boolean =
-      Seq("tombstones", "deltas").map(k =>
-        sidecar(v, k).map(_.count()).getOrElse(0L)).sum <= broadcastKeyCap
-    val fastEligible =
-      hfs.exists(new org.apache.hadoop.fs.Path(sp, s"v=$v1")) &&
-        hfs.exists(new org.apache.hadoop.fs.Path(sp, s"v=$v2")) &&
-        pinned(v1) == pinned(v2) &&
-        empty(sidecar(v1, "tombstones")) && empty(sidecar(v1, "deltas")) &&
-        feedSized(v2)
-    if (!fastEligible) return snapshotDiffGeneral(spark, path, v1, v2, keyCol)
+    if ((deltas2 ++ tombs2).map(_.count()).sum > broadcastKeyCap)
+      return snapshotDiffGeneral(spark, path, v1, v2, keyCol)
     // FAST PATH — v2's sidecars ARE the change set
-    val base0 = readSnapshot(spark, path, v1, None)
-    val deltas0 = sidecar(v2, "deltas").map { d =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(keyCol)).orderBy(col("__seq").desc)
-      d.withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1).drop("__rn", "__seq")
-    }.getOrElse(base0.limit(0))
+    val base0 = readLayoutFiles(spark, path, files1)
+    val deltas0 = deltas2.map(latestDeltas(_, keyCol)).getOrElse(base0.limit(0))
     // align by name (a delta batch may carry an evolved column the
     // pinned base predates — it reads null there, the standing
     // additive-evolution convention)
@@ -3123,34 +2922,33 @@ object Layout {
       else d.withColumn(c, lit(null).cast(types(c))))
     val base = align(base0)
     val deltas = align(deltas0)
-    val tombs = sidecar(v2, "tombstones")
-      .map(_.select(col(keyCol))).getOrElse(base.select(col(keyCol)).limit(0))
+    val tombs = tombs2.getOrElse(base.select(col(keyCol)).limit(0))
     val changedKeys = deltas.select(col(keyCol))
       .unionByName(tombs).distinct()
     // one pass over the pinned base, broadcast-filtered to changed keys
     val b4 = base.join(broadcast(changedKeys), Seq(keyCol), "left_semi")
       .select(col(keyCol), struct(cols.map(col): _*).as("__b4"))
-    val af = deltas
-      .join(broadcast(tombs), Seq(keyCol), "left_anti") // takedown wins
+    val af = subtractKeys(deltas, tombs, keyCol) // takedown wins
       .select(col(keyCol), struct(cols.map(col): _*).as("__af"))
     diffAssemble(b4.join(af, Seq(keyCol), "full_outer")
       .join(broadcast(tombs.withColumn("__t", lit(true))), Seq(keyCol), "left"),
       keyCol, cols)
   }
 
-  /** The general snapshot diff — full-outer join of the two reads. */
+  /** The general version diff — full-outer join of the two keyed
+    * [[OptimisticCommit.readCommit]] reads. */
   private[graft] def snapshotDiffGeneral(spark: org.apache.spark.sql.SparkSession,
       path: String, v1: Long, v2: Long, keyCol: String): DataFrame = {
-    val a0 = readSnapshot(spark, path, v1, Some(keyCol))
-    val b0 = readSnapshot(spark, path, v2, Some(keyCol))
+    val a0 = OptimisticCommit.readCommit(spark, path, v1, Some(keyCol))
+    val b0 = OptimisticCommit.readCommit(spark, path, v2, Some(keyCol))
     def chk(df: DataFrame, v: Long): Unit = {
       val r = df.agg(count(lit(1)), count(col(keyCol)),
         countDistinct(col(keyCol))).head()
       require(r.getLong(0) == r.getLong(1),
-        s"snapshotDiff: null $keyCol keys in snapshot v=$v of $path — the " +
+        s"snapshotDiff: null $keyCol keys in commit v=$v of $path — the " +
           "diff is keyed and a null key addresses nothing")
       require(r.getLong(1) == r.getLong(2),
-        s"snapshotDiff: duplicate $keyCol keys in snapshot v=$v of $path — " +
+        s"snapshotDiff: duplicate $keyCol keys in commit v=$v of $path — " +
           "a keyed diff needs one row per key (dedup or diff on a unique key)")
     }
     chk(a0, v1); chk(b0, v2)
@@ -3361,7 +3159,7 @@ object Layout {
     * orphaned the table's history). The persisted union schema carries
     * over; key-addressed MoR sidecars (tombstones, upsert deltas) stay
     * valid because recluster moves rows between files but never changes
-    * a row; snapshots pinning rewritten files EXPIRE loudly — the
+    * a row; commit versions pinning rewritten files EXPIRE loudly — the
     * documented physical-expiry contract of every rewrite.
     *
     * Epoch-partitioned layouts fold every epoch EXCEPT the newest into
@@ -3428,7 +3226,7 @@ object Layout {
   def leasePath(path: String): String = path.stripSuffix("/") + "__lock"
 
   /** WRITER LEASE — long-op fencing for the layout's mutation recipes
-    * (delete, upsert, compact, refresh, snapshot, recluster). Wrap a
+    * (delete, upsert, compact, refresh, recluster). Wrap a
     * mutation batch (a stream's foreachBatch body, a whole maintenance
     * window) in this lease to fail fast instead of staging work
     * destined to lose its commit claim: acquisition
@@ -3520,8 +3318,8 @@ object Layout {
     * twin of [[requireFresh]] — `fresh=0` is the "rewrite your indexes"
     * page before a pruned read refuses), pending merge-on-read backlog
     * per key column (the applyTombstones/applyUpsertDeltas cadence
-    * signal), snapshot count, and the writer-lease holder if one is
-    * live. Everything is driver-side listing RPCs and sidecar-sized
+    * signal), the commit-log tip and retained version count, and the
+    * writer-lease holder if one is live. Everything is driver-side listing RPCs and sidecar-sized
     * reads — NO data pass — except `withDrift = true`, which adds the
     * one-pass [[layoutDrift]] TVs (the recluster trigger). This is the
     * read `maintainLayout` acts on, exposed for dashboards and humans. */
@@ -3569,7 +3367,6 @@ object Layout {
         rows += (s"pending_deltas_$c" ->
           d.select(col(c)).distinct().count().toString))
     }
-    rows += ("snapshots" -> listSnapshots(spark, path).size.toString)
     // the commit log in one glance: tip version + kind/flight state +
     // retained log size (the retention-sweep cadence signal)
     val tip = OptimisticCommit.tableVersion(spark, path)

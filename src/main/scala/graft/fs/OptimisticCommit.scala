@@ -1,7 +1,6 @@
 package graft.fs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** OPTIMISTIC CONCURRENCY for the layout — the conditional-commit
   * protocol, load-bearing since r18: every public [[Layout]] mutator
@@ -23,9 +22,12 @@ import org.apache.spark.sql.functions._
   *    completion timestamp — pure driver FS ops, no Spark jobs, so the
   *    per-commit cost is milliseconds at any table size. The state dir
   *    is what makes every commit a READABLE VERSION ([[readCommit]] /
-  *    [[readCommitAsOf]] — time travel no longer needs an explicit
-  *    [[Layout.snapshotLayout]] call) and what lets the protocol tell a
-  *    finished commit from a claimer that crashed mid-flight.
+  *    [[readCommitAsOf]], and [[Layout.snapshotDiff]] between two of
+  *    them) — the layout's one time-travel mechanism — and what lets
+  *    the protocol tell a finished commit from a claimer that crashed
+  *    mid-flight. This object is the only reader of the state capture
+  *    (`files.txt`, `sidecars.txt`, `ts`); [[Layout]] owns the sidecar
+  *    formats the capture points into.
   *  - APPEND-class commits (new files only: epoch appends, MoR sidecar
   *    stagings) claim AFTER their body and RETRY-WITH-REBASE on a lost
   *    race — appends commute. An intervening REWRITE-class commit
@@ -390,13 +392,10 @@ object OptimisticCommit {
         "view shares); read the live table or a newer commit")
   }
 
-  /** Commit `version`'s pinned DATA-file listing, expiry-verified: the
-    * uris recorded in its state capture, refusing when the commit is
-    * mid-flight/aborted or any pinned file has been physically
-    * rewritten since — the validated listing [[readCommit]] and the
-    * SQL surface's `versionAsOf` option both serve. */
-  def commitDataFiles(spark: SparkSession, path: String, version: Long)
-      : Seq[String] = {
+  /** Refuse unless commit `version` is in the log with its state
+    * recorded — a swept, mid-flight or aborted version is not readable. */
+  private def requireReadable(spark: SparkSession, path: String,
+      version: Long): Unit = {
     val c = commitInfo(spark, path, version).getOrElse(
       throw new IllegalArgumentException(
         s"no commit v=$version in the log for $path (have " +
@@ -404,6 +403,16 @@ object OptimisticCommit {
     require(c.complete,
       s"commit ${describe(spark, path, version)} of $path has no recorded " +
         "state — it is mid-flight or aborted, not a readable version")
+  }
+
+  /** Commit `version`'s pinned DATA-file listing, expiry-verified: the
+    * uris recorded in its state capture, refusing when the commit is
+    * mid-flight/aborted or any pinned file has been physically
+    * rewritten since — the validated listing [[readCommit]] and the
+    * SQL surface's `versionAsOf` option both serve. */
+  def commitDataFiles(spark: SparkSession, path: String, version: Long)
+      : Seq[String] = {
+    requireReadable(spark, path, version)
     val files = stateLines(spark, path, version, "files.txt")
     requirePinnedLive(files, Layout.listedDataFilePaths(spark, path).keySet,
       path, version, "data")
@@ -435,57 +444,44 @@ object OptimisticCommit {
     vs.find(v => commitStateMs(spark, path, v).isDefined)
   }
 
+  /** Commit `version`'s pinned MoR sidecar files for `keyCol`, as
+    * (delta files, tombstone files) — the one reader of the state
+    * capture's `kind|key|uri` lines. Validated like [[commitDataFiles]]:
+    * refuses when the commit is mid-flight/aborted or any pinned sidecar
+    * file has been physically rewritten since (a fold clears its
+    * sidecar, expiring every pin of it). */
+  def commitSidecarFiles(spark: SparkSession, path: String, version: Long,
+      keyCol: String): (Seq[String], Seq[String]) = {
+    requireReadable(spark, path, version)
+    val side = stateLines(spark, path, version, "sidecars.txt")
+      .map(_.split("\\|", 3)).collect {
+        case Array(kind, k, uri) if k == keyCol => (kind, uri)
+      }
+    def pinned(kind: String, root: String): Seq[String] = {
+      val files = side.collect { case (`kind`, u) => u }
+      if (files.nonEmpty)
+        requirePinnedLive(files, Layout.listedDataFilePaths(spark, root).keySet,
+          path, version, s"$kind-sidecar")
+      files
+    }
+    (pinned("deltas", Layout.deltaPath(path, keyCol)),
+      pinned("tombstones", Layout.tombstonePath(path, keyCol)))
+  }
+
   /** TIME-TRAVEL read of commit `version`: exactly the logical table the
     * commit completed at — the pinned data files, with the pinned MoR
     * sidecar state folded when `keyCol` is given (staged deltas replace/
-    * insert, tombstones subtract — the serve-path fold). Refuses loudly
-    * when any pinned file has been physically rewritten since (the same
-    * expiry contract as [[Layout.readSnapshot]]); a partial historical
-    * answer is a wrong answer. */
+    * insert, tombstones subtract — [[Layout.foldMor]], the serve-path
+    * fold). Refuses loudly when the commit is mid-flight, aborted or
+    * swept from the log, and when any pinned file has been physically
+    * rewritten since; a partial historical answer is a wrong answer. */
   def readCommit(spark: SparkSession, path: String, version: Long,
       keyCol: Option[String] = None): DataFrame = {
-    val files = commitDataFiles(spark, path, version)
-    val data = Layout.readLayoutFiles(spark, path, files)
-    keyCol match {
-      case None => data
-      case Some(kc) =>
-        val side = stateLines(spark, path, version, "sidecars.txt")
-          .map(_.split("\\|", 3)).collect {
-            case Array(kind, k, uri) if k == kc => (kind, uri)
-          }
-        val deltaFiles = side.collect { case ("deltas", u) => u }
-        val tombFiles = side.collect { case ("tombstones", u) => u }
-        val withDeltas =
-          if (deltaFiles.isEmpty) data
-          else {
-            requirePinnedLive(deltaFiles,
-              Layout.listedDataFilePaths(spark,
-                Layout.deltaPath(path, kc)).keySet,
-              path, version, "delta-sidecar")
-            // basePath restores the `seq=<n>` partition column the
-            // latest-wins fold orders by
-            val d = spark.read
-              .option("basePath", Layout.deltaPath(path, kc))
-              .option("mergeSchema", "true").parquet(deltaFiles: _*)
-              .withColumnRenamed("seq", "__seq")
-              .withColumn("__seq", col("__seq").cast("long"))
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col(kc)).orderBy(col("__seq").desc)
-            val latest = d.withColumn("__rn", row_number().over(w))
-              .where(col("__rn") === 1).drop("__rn", "__seq")
-            data.join(broadcast(latest.select(col(kc))), Seq(kc), "left_anti")
-              .unionByName(latest, allowMissingColumns = true)
-          }
-        if (tombFiles.isEmpty) withDeltas
-        else {
-          requirePinnedLive(tombFiles,
-            Layout.listedDataFilePaths(spark,
-              Layout.tombstonePath(path, kc)).keySet,
-            path, version, "tombstone-sidecar")
-          withDeltas.join(
-            broadcast(spark.read.parquet(tombFiles: _*).select(col(kc))),
-            Seq(kc), "left_anti")
-        }
+    val data = Layout.readLayoutFiles(spark, path,
+      commitDataFiles(spark, path, version))
+    keyCol.fold(data) { kc =>
+      val (deltas, tombstones) = Layout.pinnedMor(spark, path, version, kc)
+      Layout.foldMor(data, deltas, tombstones, kc)
     }
   }
 
@@ -510,7 +506,7 @@ object OptimisticCommit {
     require(stamped.nonEmpty,
       s"no completed commits in the log for $path — nothing to resolve an " +
         "as-of read against (mutate through the plain Layout API, which " +
-        "commits by default, or pin a snapshot)")
+        "commits by default)")
     resolveFrom(stamped, tsMs).getOrElse {
       val lo = stamped.minBy(_._2)._2
       val hi = stamped.maxBy(_._2)._2
@@ -534,14 +530,14 @@ object OptimisticCommit {
   // --------------------------------------------------------------------
 
   /** RETENTION SWEEP for the commit log — drop every version but the
-    * newest `keep` (claim + state + abort marker): the cron twin of
-    * [[Layout.expireSnapshotsKeepLast]], bounding [[tableVersion]]'s
-    * listing on a table committing per micro-batch. Never drops the
-    * tip (`keep` is floored at 1 — the tip is the CAS anchor). As-of
-    * reads inside the kept window keep resolving; an append whose base
-    * predates the window refuses on its rebase (its race-window commits
-    * are no longer auditable — re-read and retry, the honest answer).
-    * Returns the dropped versions. */
+    * newest `keep` (claim + state + abort marker), bounding
+    * [[tableVersion]]'s listing on a table committing per micro-batch.
+    * Never drops the tip (`keep` is floored at 1 — the tip is the CAS
+    * anchor). As-of reads inside the kept window keep resolving; swept
+    * versions refuse every read and diff; an append whose base predates
+    * the window refuses on its rebase (its race-window commits are no
+    * longer auditable — re-read and retry, the honest answer). Returns
+    * the dropped versions. */
   def expireCommitsKeepLast(spark: SparkSession, path: String,
       keep: Int): Seq[Long] = {
     require(keep >= 1, s"keep must be >= 1 (the tip anchors the CAS), got $keep")

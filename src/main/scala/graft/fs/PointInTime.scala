@@ -130,26 +130,25 @@ object PointInTime {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
-    // All carry-forward columns in ONE select → a single Window node (one
-    // pass over each sorted partition). The foldLeft/withColumn form left a
-    // stack of per-column Window nodes that CollapseWindow did not merge —
-    // same shuffle, but featureCols+1 passes over every partition.
-    val carried = unioned.select(
-      col("*") +:
-        last(when(col("__kind") === 0, col("__ts")), ignoreNulls = true).over(w).as("__last_fts") +:
-        featureCols.map(c =>
-          last(when(col("__kind") === 0, col(s"__f_$c")), ignoreNulls = true).over(w).as(s"__c_$c")): _*
-    )
+    // The latest feature row is carried WHOLE, as one struct of its
+    // timestamp and payloads: the struct is non-null even when a payload
+    // is null, so a null in the latest row serves null, as in the spec
+    // form, never an older row's value. One window expression → one
+    // Window node, one pass over each sorted partition.
+    val latestFeature = struct(col("__ts") +: featureCols.map(c => col(s"__f_$c")): _*)
+    val carried = unioned.select(col("*"),
+      last(when(col("__kind") === 0, latestFeature), ignoreNulls = true).over(w).as("__last"))
 
     val ttlOk = ttl
-      .map(t => col("__last_fts") >= col("__ts") - expr(s"INTERVAL $t"))
+      .map(t => col("__last").getField("__ts") >= col("__ts") - expr(s"INTERVAL $t"))
       .getOrElse(lit(true))
     carried
       .where(col("__kind") === 1)
       .select(
         (keys.map(col) ++ Seq(col("__ts").as(eventTs)) ++
           entityCols.filterNot(k => keys.contains(k) || k == eventTs).map(c => col(s"__e_$c").as(c)) ++
-          featureCols.map(c => when(ttlOk, col(s"__c_$c")).otherwise(lit(null)).as(c))): _*
+          featureCols.map(c =>
+            when(ttlOk, col("__last").getField(s"__f_$c")).otherwise(lit(null)).as(c))): _*
       )
       // restore caller's column order
       .select(entityCols.map(col) ++ featureCols.map(col): _*)

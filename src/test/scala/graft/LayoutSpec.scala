@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.fs.Layout
+import graft.fs.{Layout, OptimisticCommit}
 
 /** Z-order layout: key algebra + the measured pruning receipt — the
   * written Z-ordered files must carry tight min/max stats on BOTH
@@ -16,6 +16,10 @@ class LayoutSpec extends SparkSpec {
     .select(col("id"),
       (col("id") % 100).cast("double").as("a"),
       (col("id") / lit(100)).cast("long").cast("double").as("b"))
+
+  // the newest completed commit version — what a time-travel read pins
+  private def latestVersion(path: String): Long =
+    OptimisticCommit.latestCompletedVersion(spark, path).get
 
   test("zorderKey: buckets and key stay in range; equal inputs share keys; nulls take bucket 0") {
     val keyed = Layout.zorderKey(grid, "a", "b", bits = 6)
@@ -543,7 +547,7 @@ class LayoutSpec extends SparkSpec {
     assert(d0("z_cols") == "a,b" && d0("bits") == "6" && d0("schema_cols") == "3")
     assert(d0("manifest") == "fresh" && d0("vindex_id") == "fresh" &&
       d0("qindex_b_by_id") == "fresh", s"$d0")
-    assert(d0("snapshots") == "0" && !d0.contains("lease_holder"))
+    assert(!d0.contains("snapshots") && !d0.contains("lease_holder"))
     assert(d0.contains("drift_a") && d0.contains("drift_b"))
     // the commit log surfaces too: build + append = v1 at the tip,
     // complete, with both versions retained
@@ -561,25 +565,27 @@ class LayoutSpec extends SparkSpec {
     Layout.refreshValueIndex(spark, s"$base/z", "id", buckets = 1 << 12)
     Layout.refreshQuantileIndex(spark, s"$base/z", "b", "id", k = 16)
     assert(facts()("manifest") == "fresh")
-    // MoR backlog counts; snapshot count; live lease holder
+    // MoR backlog counts; each staging is one more retained version;
+    // live lease holder
+    val tipBefore = facts()("commit_tip").toLong
     Layout.deleteLogical(spark, s"$base/z", Seq(4L, 6L).toDF("id"), "id")
     Layout.upsertLogical(spark, s"$base/z",
       Seq((8L, 1.0, 2.0)).toDF("id", "a", "b"), "id")
-    Layout.snapshotLayout(spark, s"$base/z", Some("id"))
     val d2 = facts(keyCols = Seq("id"))
     assert(d2("pending_tombstones_id") == "2" && d2("pending_deltas_id") == "1",
       s"$d2")
-    assert(d2("snapshots") == "1")
+    assert(d2("commit_tip") == (tipBefore + 2).toString &&
+      d2("commits_retained") == (tipBefore + 3).toString, s"$d2")
     Layout.withWriterLease(spark, s"$base/z", "describe-spec") {
       assert(facts()("lease_holder") == "describe-spec")
     }
     assert(!facts().contains("lease_holder"), "lease released on exit")
   }
 
-  test("snapshotDiff: CDC between snapshots — fast path ≡ general, no-ops excluded, takedown wins, refusals") {
+  test("snapshotDiff: CDC between commit versions — fast path ≡ general, no-ops excluded, takedown wins, refusals") {
     val base = java.nio.file.Files.createTempDirectory("graft-zdiff").toString
     Layout.writeZordered(grid, s"$base/z", "a", "b", bits = 6, numFiles = 8)
-    val v0 = Layout.snapshotLayout(spark, s"$base/z", Some("id"))
+    val v0 = latestVersion(s"$base/z")
     // stage: a real update (id 10), a NO-OP delta (id 20, identical row),
     // an insert (id 50000), an insert-then-deleted key (id 50001), and
     // tombstones for an existing key (id 30), the update overlap (id 10
@@ -594,7 +600,7 @@ class LayoutSpec extends SparkSpec {
     Layout.upsertLogical(spark, s"$base/z", updates, "id")
     Layout.deleteLogical(spark, s"$base/z",
       Seq(30L, 40L, 50001L, 77777L).toDF("id"), "id")
-    val v1 = Layout.snapshotLayout(spark, s"$base/z", Some("id"))
+    val v1 = latestVersion(s"$base/z")
     val fast = Layout.snapshotDiff(spark, s"$base/z", v0, v1, "id")
       .as[(Long, String, Option[Double], Option[Double], Option[Double], Option[Double])]
       .collect().toSet
@@ -617,27 +623,26 @@ class LayoutSpec extends SparkSpec {
       (50000L, "insert", None, None, Some(1.0), Some(2.0)))
     assert(fast == expected, s"got $fast")
     // a non-eligible pair (v1 pins pending sidecars) takes the general
-    // path and still answers: stage one more change, snapshot v2, diff
+    // path and still answers: stage one more change (version v2), diff
     // v1→v2 — only the new change appears
     Layout.upsertLogical(spark, s"$base/z",
       Seq((11L, 111.0, 111.0)).toDF("id", "a", "b"), "id")
-    val v2 = Layout.snapshotLayout(spark, s"$base/z", Some("id"))
+    val v2 = latestVersion(s"$base/z")
     val d12 = Layout.snapshotDiff(spark, s"$base/z", v1, v2, "id")
       .as[(Long, String, Option[Double], Option[Double], Option[Double], Option[Double])]
       .collect().toSet
     assert(d12 == Set((11L, "update", Some(11.0), Some(0.0), Some(111.0), Some(111.0))), s"$d12")
-    // retention sweep: all but the newest `keep` versions drop
-    assert(Layout.listSnapshots(spark, s"$base/z").sorted == Seq(v0, v1, v2))
-    assert(Layout.expireSnapshotsKeepLast(spark, s"$base/z", 1) == Seq(v0, v1))
-    assert(Layout.listSnapshots(spark, s"$base/z") == Seq(v2))
-    assert(Layout.expireSnapshotsKeepLast(spark, s"$base/z", 1).isEmpty,
-      "sweep is convergent")
+    // a version swept by the log's retention refuses the diff loudly
+    OptimisticCommit.expireCommitsKeepLast(spark, s"$base/z", 1)
+    val swept = intercept[IllegalArgumentException](
+      Layout.snapshotDiff(spark, s"$base/z", v0, v2, "id"))
+    assert(swept.getMessage.contains(s"no commit v=$v0"), swept.getMessage)
     // keyed diff refuses duplicate keys loudly
     val dup = java.nio.file.Files.createTempDirectory("graft-zdup").toString
     Layout.writeZordered(grid.where(col("id") < 100)
       .unionAll(grid.where(col("id") < 100)), s"$dup/z",
       "a", "b", bits = 4, numFiles = 2)
-    val dv = Layout.snapshotLayout(spark, s"$dup/z", Some("id"))
+    val dv = latestVersion(s"$dup/z")
     val err = intercept[IllegalArgumentException](
       Layout.snapshotDiffGeneral(spark, s"$dup/z", dv, dv, "id"))
     assert(err.getMessage.contains("duplicate"))
@@ -839,7 +844,7 @@ class LayoutSpec extends SparkSpec {
     assert(Layout.applyTombstones(spark, s"$base/z", "id", Seq("a", "b")) == 0L)
   }
 
-  test("snapshots: time travel across appends and logical deletes, loud expiry on physical rewrite, versions independent") {
+  test("commit versions: time travel across appends and logical deletes, loud expiry on physical rewrite, versions independent") {
     val base = java.nio.file.Files.createTempDirectory("graft-zsnap").toString
     Layout.buildZorderedEpoch(grid.where(col("id") % 4 === 0), s"$base/z",
       Seq("a", "b"), bits = 6, numFiles = 4)
@@ -848,39 +853,34 @@ class LayoutSpec extends SparkSpec {
     Layout.writeManifest(spark, s"$base/z", Seq("a", "b"))
     Layout.writeValueIndex(spark, s"$base/z", "id")
     // v0 pins the 2-epoch state
-    val v0 = Layout.snapshotLayout(spark, s"$base/z", Some("id"))
-    assert(v0 == 0L)
+    val v0 = latestVersion(s"$base/z")
     // appends do NOT disturb v0
     Layout.appendZorderedEpoch(grid.where(col("id") % 4 === 2), s"$base/z", 2,
       numFiles = 4)
-    assert(Layout.readSnapshot(spark, s"$base/z", v0, Some("id")).count() == 5000)
+    assert(OptimisticCommit.readCommit(spark, s"$base/z", v0, Some("id")).count() == 5000)
     assert(spark.read.parquet(s"$base/z").count() == 7500)
     // a logical delete after v0: v0 still serves the PRE-delete state,
-    // a snapshot taken now pins the deleted view
+    // the delete's own version pins the deleted view
     Layout.deleteLogical(spark, s"$base/z", spark.range(0, 4000, 4).toDF("id"), "id")
-    val v1 = Layout.snapshotLayout(spark, s"$base/z", Some("id"))
-    assert(v1 == 1L)
-    assert(Layout.readSnapshot(spark, s"$base/z", v0, Some("id")).count() == 5000,
-      "an older snapshot must not see a later logical delete")
-    assert(Layout.readSnapshot(spark, s"$base/z", v1, Some("id")).count() == 7500 - 1000,
-      "a snapshot after the logical delete pins the deleted view")
-    assert(Layout.readSnapshot(spark, s"$base/z", v1, Some("id"))
+    val v1 = latestVersion(s"$base/z")
+    assert(v1 > v0)
+    assert(OptimisticCommit.readCommit(spark, s"$base/z", v0, Some("id")).count() == 5000,
+      "an older version must not see a later logical delete")
+    assert(OptimisticCommit.readCommit(spark, s"$base/z", v1, Some("id")).count() == 7500 - 1000,
+      "a version after the logical delete pins the deleted view")
+    assert(OptimisticCommit.readCommit(spark, s"$base/z", v1, Some("id"))
       .where(col("id") === 8).count() == 0)
-    // the fold rewrites files → BOTH snapshots expire loudly
+    // the fold rewrites files → BOTH versions expire loudly
     Layout.refreshManifest(spark, s"$base/z", Seq("a", "b"), allowGone = true)
     Layout.refreshValueIndex(spark, s"$base/z", "id", allowGone = true)
     Layout.applyTombstones(spark, s"$base/z", "id", Seq("a", "b"))
     intercept[IllegalArgumentException](
-      Layout.readSnapshot(spark, s"$base/z", v0, Some("id")))
+      OptimisticCommit.readCommit(spark, s"$base/z", v0, Some("id")))
     intercept[IllegalArgumentException](
-      Layout.readSnapshot(spark, s"$base/z", v1, Some("id")))
-    // a fresh snapshot of the post-fold state serves; expiry drops it
-    val v2 = Layout.snapshotLayout(spark, s"$base/z", Some("id"))
-    assert(Layout.readSnapshot(spark, s"$base/z", v2, Some("id")).count() == 6500)
-    assert(Layout.expireSnapshot(spark, s"$base/z", v0))
-    assert(Layout.listSnapshots(spark, s"$base/z").sorted == Seq(1L, 2L))
-    intercept[IllegalArgumentException](
-      Layout.readSnapshot(spark, s"$base/z", v0, Some("id")))
+      OptimisticCommit.readCommit(spark, s"$base/z", v1, Some("id")))
+    // the fold's own version serves the post-fold state
+    val v2 = latestVersion(s"$base/z")
+    assert(OptimisticCommit.readCommit(spark, s"$base/z", v2, Some("id")).count() == 6500)
   }
 
   test("schema evolution: later epoch's new column reads as null for old rows, new column prunable after manifest rewrite") {
@@ -1117,7 +1117,7 @@ class LayoutSpec extends SparkSpec {
       s"half the mass sits above every frozen boundary: ${before("b")}")
     assert(before("a") < 0.25,
       s"a is identically distributed in both halves: ${before("a")}")
-    val v0 = Layout.snapshotLayout(spark, s"$base/z")
+    val v0 = latestVersion(s"$base/z")
     val (_, _, bounds0) = Layout.readLayoutMeta(spark, s"$base/z")
     val schema0 = Layout.layoutSchema(spark, s"$base/z")
     Layout.reclusterLayout(spark, s"$base/z", numFiles = 8)
@@ -1134,9 +1134,9 @@ class LayoutSpec extends SparkSpec {
     assert(bounds0(1) != bounds1(1), "b's boundaries must be re-derived")
     assert(Layout.layoutSchema(spark, s"$base/z") == schema0,
       "recluster must not forget the table's schema")
-    // every file changed: the pinned snapshot expires LOUDLY
+    // every file changed: the pinned version expires LOUDLY
     intercept[IllegalArgumentException](
-      Layout.readSnapshot(spark, s"$base/z", v0))
+      OptimisticCommit.readCommit(spark, s"$base/z", v0))
     // and pruning serves exactly again after the index rewrite
     Layout.writeManifest(spark, s"$base/z", Seq("a", "b"))
     val pr = Layout.prunedRead(spark, s"$base/z",
@@ -1709,42 +1709,11 @@ class LayoutSpec extends SparkSpec {
       s"appended=$appended — a silent interleave lost rows")
   }
 
-  test("snapshot time travel by timestamp: exact ts, between commits, before first, after last") {
-    val base = java.nio.file.Files.createTempDirectory("graft-zasof").toString
-    val path = s"$base/z"
-    Layout.writeZordered(grid.where(col("id") < 6000), path, "a", "b",
-      bits = 4, numFiles = 4)
-    val v0 = Layout.snapshotLayout(spark, path)
-    val ts0 = Layout.snapshotCreatedMs(spark, path, v0).get
-    // force the next commit onto a strictly later millisecond so the
-    // boundary pins below are deterministic
-    while (System.currentTimeMillis() <= ts0) Thread.sleep(1)
-    Layout.appendZordered(grid.where(col("id") >= 6000), path, numFiles = 2)
-    val v1 = Layout.snapshotLayout(spark, path)
-    val ts1 = Layout.snapshotCreatedMs(spark, path, v1).get
-    assert(ts1 > ts0)
-    // exact commit ts resolves to that commit (inclusive)
-    assert(Layout.resolveSnapshotAsOf(spark, path, ts0) == v0)
-    assert(Layout.resolveSnapshotAsOf(spark, path, ts1) == v1)
-    // between commits → the earlier one
-    assert(Layout.resolveSnapshotAsOf(spark, path, ts1 - 1) == v0)
-    // after the last → the newest
-    assert(Layout.resolveSnapshotAsOf(spark, path, ts1 + 1000000L) == v1)
-    // before the first → loud refusal naming the available range
-    val err = intercept[IllegalArgumentException](
-      Layout.resolveSnapshotAsOf(spark, path, ts0 - 1))
-    assert(err.getMessage.contains("predates") &&
-      err.getMessage.contains(ts0.toString), err.getMessage)
-    // the read itself serves the as-of content
-    assert(Layout.readSnapshotAsOf(spark, path, ts0).count() == 6000)
-    assert(Layout.readSnapshotAsOf(spark, path, ts1).count() == 10000)
-  }
-
   test("commit time travel: every plain-API commit is a readable version; boundaries, tie-breaks, MoR pins, expiry") {
     import graft.fs.OptimisticCommit
     val base = java.nio.file.Files.createTempDirectory("graft-zctt").toString
     val path = s"$base/z"
-    // v0: the initial build (rewrite class) — no snapshotLayout anywhere
+    // v0: the initial build (rewrite class)
     Layout.writeZordered(grid.where(col("id") % 2 === 0), path, "a", "b",
       bits = 4, numFiles = 4)
     val ts0 = OptimisticCommit.commitStateMs(spark, path, 0L).get
@@ -1760,7 +1729,9 @@ class LayoutSpec extends SparkSpec {
     assert(OptimisticCommit.resolveCommitAsOf(spark, path, ts1 + 1000000L) == 1L)
     val err = intercept[IllegalArgumentException](
       OptimisticCommit.resolveCommitAsOf(spark, path, ts0 - 1))
-    assert(err.getMessage.contains("predates"), err.getMessage)
+    // the refusal names the available range
+    assert(err.getMessage.contains("predates") &&
+      err.getMessage.contains(ts0.toString), err.getMessage)
     // the reads serve exactly the committed-at views
     val asOf0 = OptimisticCommit.readCommitAsOf(spark, path, ts0)
     assert(asOf0.count() == 5000 &&

@@ -113,8 +113,9 @@ class PlanSpec extends SparkSpec {
 
   test("q_store_training_read: facade merge-PIT plans ONE window pass on one shuffle") {
     val p = plan("q_store_training_read")
-    // the 4 carry-forward feature columns + __last_fts must share a single
-    // Window node (the foldLeft/withColumn form left 5 stacked passes)
+    // the carried latest-feature struct is one window expression on a
+    // single Window node (a foldLeft/withColumn per-column carry left 5
+    // stacked passes)
     assert(nodes(p, "Window") <= 1, s"carry-forward split into multiple Window passes:\n$p")
     assert(nodes(p, "Exchange") <= 2, s"facade PIT read regressed to multi-shuffle:\n$p")
   }

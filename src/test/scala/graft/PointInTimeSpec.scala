@@ -7,7 +7,8 @@ import graft.fs.PointInTime
 /** As-of join semantics per FIXTURES.md §5: event before any feature → null,
   * feature exactly at event ts (inclusive), feature older than TTL → null,
   * duplicate feature timestamps (tie-break), interleaved entities, null
-  * keys and null feature timestamps (never match) — and the join+rank vs
+  * keys and null feature timestamps (never match), a null value in the
+  * latest feature row (served as null) — and the join+rank vs
   * merge formulations agreeing on all of it, with and without a TTL. */
 class PointInTimeSpec extends SparkSpec {
   import spark.implicits._
@@ -22,7 +23,8 @@ class PointInTimeSpec extends SparkSpec {
     (4L, "a", ts("2024-01-03 00:00:00")), // duplicate feature ts at 01-02 10:00 -> max tie id
     (5L, "b", ts("2024-01-02 12:00:00")), // interleaved entity
     (6L, "c", ts("2024-01-02 12:00:00")), // entity with no matchable features
-    (7L, null, ts("2024-01-02 12:00:00")) // null key never matches, not even a null-key feature
+    (7L, null, ts("2024-01-02 12:00:00")), // null key never matches, not even a null-key feature
+    (8L, "d", ts("2024-01-10 00:00:00"))  // latest feature's value is null -> null, not an older value
   ).toDF("probe_id", "entity", "event_ts")
 
   // Features: (entity, fts, v, fid); two rows share ts 2024-01-02 10:00:00
@@ -34,7 +36,10 @@ class PointInTimeSpec extends SparkSpec {
     ("b", ts("2024-01-02 13:00:00"), 8.0, 201L), // after probe 5 -> excluded
     (null, ts("2024-01-02 10:00:00"), 4.0, 300L), // null key -> matches nothing
     ("c", null, 5.0, 400L)                       // null ts -> matches nothing
-  ).toDF("entity", "fts", "v", "fid")
+  ).toDF("entity", "fts", "v", "fid").unionByName(Seq[(String, Timestamp, Option[Double], Long)](
+    ("d", ts("2024-01-08 00:00:00"), Some(5.0), 500L),
+    ("d", ts("2024-01-09 00:00:00"), None, 501L) // the latest row carries a null v
+  ).toDF("entity", "fts", "v", "fid"))
 
   private def run(fn: (DataFrame, DataFrame, Seq[String], String, String, Seq[String],
       Option[String], Seq[String]) => DataFrame,
@@ -50,7 +55,8 @@ class PointInTimeSpec extends SparkSpec {
     4L -> Some(2.0),   // duplicate-ts tie-break is deterministic
     5L -> Some(9.0),   // entity b, later feature excluded
     6L -> None,        // entity c's only feature has no timestamp
-    7L -> None         // null key
+    7L -> None,        // null key
+    8L -> None         // the latest row's null, never the older row's 5.0
   )
 
   // Without a TTL the stale probe 3 serves a's latest feature; a null key
