@@ -3,13 +3,18 @@ package graft.fs
 import org.apache.spark.sql.SparkSession
 
 /** Crash-safe directory replacement — the one swap recipe every artifact
-  * rewrite in the engine shares (streaming compaction/retraction in
+  * rewrite in the engine shares (the epoch-artifact rewrites in
   * [[graft.streaming.OnlineRefresh]], the incremental layout-index
   * refreshes in [[Layout]]): write the replacement to `dir_tmp`, move the
   * live dir aside to `dir_old`, move tmp in, drop old. A crash between
   * the renames leaves `dir` or `dir_old` intact — never zero copies
   * (plain delete-then-rename has exactly that window) — and
   * [[recoverSwap]] restores the set-aside copy on the next touch.
+  *
+  * An epoch artifact swaps only its ROOT, whatever the rewrite changes
+  * under it (OnlineRefresh's `rewriteEpochs`): no sub-dir of a root is
+  * swapped on its own, so its tables change together and a reader or
+  * mutator heals the whole artifact with one `recoverSwap(root)`.
   *
   * Hadoop FS rename/delete report failure via `false`, not exceptions;
   * every transition here throws on `false` so a failed move can never be

@@ -164,10 +164,15 @@ final class FeatureStore private (
     require(v.online, s"feature view '$viewName' is not online-enabled")
     val offline = sources.toOption
     val listing = offline.map(_.partitionListing(v.source))
+    // A delta only adds rows. A dir that lost files and gained none — gone,
+    // or emptied or shrunk in place — dropped rows the fold cannot take
+    // back, so it forces a rebuild; a compaction gained a file and stays
+    // a delta.
     val changed = for {
       p <- prev
       was <- p.listing
-      now <- listing if was.keySet.subsetOf(now.keySet)
+      now <- listing if was.forall { case (dir, files) =>
+        now.get(dir).exists(f => f == files || !f.subsetOf(files)) }
     } yield now.filter { case (dir, files) => !was.get(dir).contains(files) }
     def fold(base: DataFrame, delta: DataFrame): Held = {
       val folded = OnlineStore.writeOnline(base, delta, v.entity.joinKeys, v.timestampField,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
@@ -54,15 +54,15 @@ object OnlineRefresh {
   }
 
   /** Ready a stream's artifact root before its first epoch: heal a
-    * crashed swap of the root FIRST, then of each sub-dir, then create
-    * the missing sub-dirs through the root's own Hadoop FileSystem. The
-    * order is the point: creating a sub-dir of a half-swapped root (root
-    * gone, `<root>_old` intact) would recreate the root, after which
-    * [[recoverSwap]]'s `!exists(dst)` guard never fires and the committed
-    * epochs in `_old` are lost — the checkpoint prevents re-delivery. */
+    * crashed swap of the root FIRST, then create the missing sub-dirs
+    * through the root's own Hadoop FileSystem. The order is the point:
+    * creating a sub-dir of a half-swapped root (root gone, `<root>_old`
+    * intact) would recreate the root, after which [[recoverSwap]]'s
+    * `!exists(dst)` guard never fires and the committed epochs in `_old`
+    * are lost — the checkpoint prevents re-delivery. The root is the only
+    * swap unit ([[rewriteEpochs]]), so no sub-dir needs healing. */
   private def prepareRoot(spark: SparkSession, root: String, subs: String*): Unit = {
     recoverSwap(spark, root)
-    subs.foreach(sub => recoverSwap(spark, s"$root/$sub"))
     mkdirs(spark, subs.map(sub => s"$root/$sub"): _*)
   }
 
@@ -70,6 +70,17 @@ object OnlineRefresh {
     val p = new org.apache.hadoop.fs.Path(d)
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p))
       throw new java.io.IOException(s"mkdirs $p failed")
+  }
+
+  /** Copy the tree at `from`, when there is one, to `to` (which must not
+    * exist) through the FileSystem: a table a rewrite carries verbatim. */
+  private def copyDir(spark: SparkSession, from: String, to: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val src = new org.apache.hadoop.fs.Path(from)
+    val fs = src.getFileSystem(conf)
+    if (fs.exists(src) && !org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
+        new org.apache.hadoop.fs.Path(to), false, conf))
+      throw new java.io.IOException(s"copy $src -> $to failed")
   }
 
   private def pathExists(spark: SparkSession, path: String): Boolean = {
@@ -299,11 +310,13 @@ object OnlineRefresh {
       idCol: String = "doc_id",
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery =
+  ): StreamingQuery = {
+    prepareRoot(spark, outPath) // root swap: every BM25 rewrite
     epochStream(spark, inputPath, schema, checkpoint, trigger,
         maxFilesPerTrigger, Some(outPath -> "bm25IndexStream")) { (batch, batchId) =>
       landBm25Epoch(spark, batch, outPath, batchId, textCol, idCol)
     }
+  }
 
   /** One BM25 epoch's partial index, landed as `postings/batch=<id>` +
     * `stats/batch=<id>` — shared by [[buildBm25IndexStream]] and
@@ -334,9 +347,7 @@ object OnlineRefresh {
     * `bm25IndexMerge`'s exact-integer-sum normalization folds the
     * per-batch stats rows into the single whole-corpus row. */
   def readBm25Index(spark: SparkSession, outPath: String): graft.ops.TextAnalysis.Bm25Index = {
-    recoverSwap(spark, outPath) // root swap: retractBm25Artifact
-    recoverSwap(spark, s"$outPath/postings")
-    recoverSwap(spark, s"$outPath/stats")
+    recoverSwap(spark, outPath)
     graft.ops.TextAnalysis.bm25IndexMerge(Seq(graft.ops.TextAnalysis.Bm25Index(
       spark.read.parquet(s"$outPath/postings"),
       spark.read.parquet(s"$outPath/stats"))))
@@ -373,7 +384,7 @@ object OnlineRefresh {
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
-    recoverSwap(spark, outPath) // root swap: recenterIvfIndex
+    recoverSwap(spark, outPath) // before landing centroids: see prepareRoot
     landCentroidsIfAbsent(spark, outPath, centroids)
     epochStream(spark, inputPath, schema, checkpoint, trigger,
         maxFilesPerTrigger, Some(outPath -> "ivfIndexStream")) { (batch, batchId) =>
@@ -402,8 +413,7 @@ object OnlineRefresh {
     * served [[graft.ops.Similarity.IvfIndex]]: partition discovery unions
     * the per-batch assignment shards; centroids read back as-landed. */
   def readIvfIndex(spark: SparkSession, outPath: String): graft.ops.Similarity.IvfIndex = {
-    recoverSwap(spark, outPath) // root swap: applyIvfTombstones
-    recoverSwap(spark, s"$outPath/assignments")
+    recoverSwap(spark, outPath)
     graft.ops.Similarity.IvfIndex(
       spark.read.parquet(s"$outPath/centroids"),
       spark.read.parquet(s"$outPath/assignments"))
@@ -441,12 +451,12 @@ object OnlineRefresh {
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
     recoverSwap(spark, outPath)
-    recoverSwap(spark, s"$outPath/codebooks")
     if (!pathExists(spark, s"$outPath/codebooks"))
       // the one-time codebook landing commits via dir swap: a crash
       // mid-write leaves only the tmp dir (swept on the retry), never a
       // partial codebooks dir a bare existence check would adopt as
-      // authoritative and silently encode every future batch against
+      // authoritative and silently encode every future batch against;
+      // it never moves a live dir aside, so there is no `_old` to heal
       swapDir(spark, s"$outPath/codebooks") { tmp =>
         codebooks.write.mode("overwrite").parquet(tmp)
       }
@@ -467,28 +477,23 @@ object OnlineRefresh {
     * back as-landed. */
   def readPqIndex(spark: SparkSession, outPath: String): graft.ops.Similarity.PqIndex = {
     recoverSwap(spark, outPath)
-    recoverSwap(spark, s"$outPath/codes")
     graft.ops.Similarity.PqIndex(
       spark.read.parquet(s"$outPath/codebooks"),
       spark.read.parquet(s"$outPath/codes"))
   }
 
-  /** [[retractBatchArtifact]] over the [[buildPqIndexStream]] codes
-    * shards — the same per-row algebra as [[retractIvfArtifact]]:
-    * dropping ids' rows IS encode(W ∖ D) (codes carry no cross-row
-    * terms); codebooks stay fixed. */
+  /** RETRACT ids from the [[buildPqIndexStream]] codes shards — the same
+    * per-row algebra as [[retractIvfArtifact]]: dropping ids' rows IS
+    * encode(W ∖ D) (codes carry no cross-row terms); codebooks stay
+    * fixed. Idempotent. */
   def retractPqArtifact(spark: SparkSession, outPath: String,
-      vecIds: DataFrame, idCol: String = "vec_id"): Unit = {
-    recoverSwap(spark, outPath)
-    retractBatchArtifact(spark, s"$outPath/codes", vecIds, idCol)
-  }
+      vecIds: DataFrame, idCol: String = "vec_id"): Unit =
+    rewriteEpochs(spark, Pq, outPath, idCol, retract = Some(vecIds))
 
   /** Compact the [[buildPqIndexStream]] codes shards (per-row, no
     * cross-row terms — identity fold; codebooks are one fixed table). */
-  def compactPqIndex(spark: SparkSession, outPath: String): Boolean = {
-    recoverSwap(spark, outPath)
-    compactBatchArtifact(spark, s"$outPath/codes")
-  }
+  def compactPqIndex(spark: SparkSession, outPath: String): Boolean =
+    rewriteEpochs(spark, Pq, outPath, fold = true).folded
 
   /** RE-TRAIN the PQ artifact from the live corpus — the quantizer twin
     * of [[recenterIvfIndex]], closing the loop [[graft.ops.Similarity
@@ -497,25 +502,18 @@ object OnlineRefresh {
     * [[graft.ops.Similarity.refinedPqCodebooks]] — NOT the bare lowest-id
     * bootstrap, which on a low-id-drifted corpus would re-pick nearly the
     * books it is replacing and make retraining a near-no-op),
-    * every indexed id re-encoded against them, one crash-safe root swap.
-    * Epochs fold all-but-newest into the oldest id; the newest re-encodes
-    * on its OWN partition so a replayed last micro-batch still overwrites
-    * itself — but note the replay would re-encode against the NEW stored
-    * codebooks (the stream reads them per batch), so replay stays
-    * idempotent on the served result. The corpus must cover every
+    * every indexed id re-encoded against them, one [[rewriteEpochs]]
+    * root swap (epochs fold; the newest re-encodes on its OWN partition
+    * — a replay would re-encode against the NEW stored codebooks, which
+    * the stream reads per batch, so replay stays idempotent on the
+    * served result). The corpus must cover every
     * indexed id exactly once (loud refusal otherwise — re-encoding would
     * silently drop or duplicate). Returns false on an empty artifact. */
   def retrainPqIndex(spark: SparkSession, outPath: String,
       corpus: DataFrame, nSub: Int = 8, nCodes: Int = 16,
       idCol: String = "vec_id", embCol: String = "embedding",
       refineIters: Int = 2): Boolean = {
-    recoverSwap(spark, outPath)
-    recoverSwap(spark, s"$outPath/codes")
-    recoverSwap(spark, s"$outPath/codebooks")
-    val epochs = epochIds(spark, s"$outPath/codes")
-    if (epochs.isEmpty) return false
-    val newest = epochs.last
-    val target = epochs.head
+    if (epochsOf(spark, Pq, outPath).isEmpty) return false
     val member = spark.read.parquet(s"$outPath/codes")
       .select(col(idCol), col("batch").cast("long").as("__b"))
     // ONE aggregate answers all three integrity questions in a single
@@ -543,16 +541,14 @@ object OnlineRefresh {
     val books = graft.ops.Similarity.pqCodebookTable(
       joined.select(col(idCol), col(embCol)), nSub, nCodes, idCol, embCol,
       refineIters)
-    def enc(df: DataFrame): DataFrame =
-      graft.ops.Similarity.pqEncodeAgainst(df, books, idCol, embCol)
-    swapDir(spark, outPath) { tmp =>
-      books.write.mode("overwrite").parquet(s"$tmp/codebooks")
-      enc(joined.where(col("__b") === newest).drop("__b"))
-        .write.mode("overwrite").parquet(s"$tmp/codes/batch=$newest")
-      if (epochs.size > 1)
-        enc(joined.where(col("__b") =!= newest).drop("__b"))
-          .write.mode("overwrite").parquet(s"$tmp/codes/batch=$target")
-    }
+    // the epoch id rides through the encode inside the id column, so each
+    // row encodes once and the per-epoch writes prune on it
+    val codes = graft.ops.Similarity.pqEncodeAgainst(
+      joined.select(struct(col(idCol), col("__b").as("batch")).as("__k"), col(embCol)),
+      books, "__k", embCol)
+      .select(col(s"__k.$idCol"), col("codes"), col("recon_n2"), col("__k.batch"))
+    rewriteEpochs(spark, Pq, outPath, fold = true,
+      refit = Map("codebooks" -> books, "codes" -> codes))
     true
   }
 
@@ -674,13 +670,13 @@ object OnlineRefresh {
     * [[graft.ops.Similarity.ivfIndex]] bootstrap/Lloyd path as a fresh
     * build — so recenter-after-drift ≡ `ivfIndex` over the accumulated
     * corpus THROUGH THE SERVED SCORES (q_ivf_recentered pins it).
-    * Committed epochs fold into the oldest partition (their epoch
-    * boundaries carry no information the new assignment preserves); the
-    * newest epoch keeps its own partition so an at-least-once replay
-    * overwrites rather than double-lands (the [[compactBatchArtifact]]
-    * argument). A `dels` subtree ([[buildIvfIndexRetractStream]]) rides
-    * the swap verbatim — tombstones name ids, which re-centering does
-    * not change. Run between stream runs. */
+    * The swap is [[rewriteEpochs]]': committed epochs fold into the
+    * oldest partition (their epoch boundaries carry no information the
+    * new assignment preserves), the newest keeps its own so an
+    * at-least-once replay overwrites rather than double-lands, and a
+    * `dels` subtree ([[buildIvfIndexRetractStream]]) rides verbatim —
+    * tombstones name ids, which re-centering does not change. Run
+    * between stream runs. */
   def recenterIvfIndex(
       spark: SparkSession,
       outPath: String,
@@ -689,12 +685,7 @@ object OnlineRefresh {
       iters: Int = 0,
       idCol: String = "vec_id",
       embCol: String = "embedding"): Boolean = {
-    recoverSwap(spark, outPath)
-    recoverSwap(spark, s"$outPath/assignments")
-    val epochs = epochIds(spark, s"$outPath/assignments")
-    if (epochs.isEmpty) return false
-    val newest = epochs.last
-    val target = epochs.head
+    if (epochsOf(spark, Ivf, outPath).isEmpty) return false
     val member = spark.read.parquet(s"$outPath/assignments")
       .select(col(idCol), col("batch").cast("long").as("__b"))
     val emb = corpus.select(col(idCol), col(embCol))
@@ -706,19 +697,10 @@ object OnlineRefresh {
         "drop or duplicate them")
     val fresh = graft.ops.Similarity.ivfIndex(
       joined.select(col(idCol), col(embCol)), nLists, iters, idCol, embCol)
-    val withBatch = fresh.assignments.join(member, Seq(idCol))
-    val folded = withBatch.where(col("__b") =!= newest).select(col(idCol), col("cell"))
-    val newestPart = withBatch.where(col("__b") === newest).select(col(idCol), col("cell"))
-    val dels = standingDels(spark, outPath)
-    val keepDelsDir = pathExists(spark, s"$outPath/dels")
-    swapDir(spark, outPath) { tmp =>
-      fresh.centroids.write.mode("overwrite").parquet(s"$tmp/centroids")
-      if (epochs.length > 1)
-        folded.write.mode("overwrite").parquet(s"$tmp/assignments/batch=$target")
-      newestPart.write.mode("overwrite").parquet(s"$tmp/assignments/batch=$newest")
-      dels.foreach(_.write.partitionBy("batch").mode("overwrite").parquet(s"$tmp/dels"))
-      if (dels.isEmpty && keepDelsDir) mkdirs(spark, s"$tmp/dels")
-    }
+    val assignments = fresh.assignments.join(member, Seq(idCol))
+      .select(col(idCol), col("cell"), col("__b").as("batch"))
+    rewriteEpochs(spark, Ivf, outPath, fold = true,
+      refit = Map("centroids" -> fresh.centroids, "assignments" -> assignments))
     true
   }
 
@@ -726,9 +708,9 @@ object OnlineRefresh {
     * absent dels dir, or one with no `batch=` child yet (the stream
     * created it and no epoch landed; emptied by a tombstone apply), has
     * no schema to infer. */
-  private def standingDels(spark: SparkSession, outPath: String): Option[DataFrame] =
-    if (epochIds(spark, s"$outPath/dels").nonEmpty)
-      Some(spark.read.parquet(s"$outPath/dels"))
+  private def standingDels(spark: SparkSession, root: String): Option[DataFrame] =
+    if (epochIds(spark, s"$root/dels").nonEmpty)
+      Some(spark.read.parquet(s"$root/dels"))
     else None
 
   /** Serve the [[buildIvfIndexRetractStream]] artifact: union the
@@ -753,30 +735,13 @@ object OnlineRefresh {
     * re-lands its tombstone partition and its identical assignment shard,
     * and re-applying those tombstones at read is an anti-join no-op. (The
     * BM25 twin must keep its newest epoch logical precisely because its
-    * stats subtraction is NOT idempotent.) Assignments, the emptied dels
-    * subtree, and the carried-through centroids move under ONE crash-safe
-    * root swap; serve output is invariant (q_stream_ivf_retracted's
+    * stats subtraction is NOT idempotent.) One [[rewriteEpochs]] root
+    * swap; serve output is invariant (q_stream_ivf_retracted's
     * oracle family pins it). No-op (false) when no tombstones exist. Run
     * between stream runs, like compaction. */
   def applyIvfTombstones(spark: SparkSession, outPath: String,
-      idCol: String = "vec_id"): Boolean = {
-    recoverSwap(spark, outPath)
-    val delIds = standingDels(spark, outPath).getOrElse(return false)
-      .select(col(idCol)).distinct()
-    if (delIds.isEmpty) return false
-    val asg = spark.read.parquet(s"$outPath/assignments")
-    val kept = asg.join(broadcast(delIds), Seq(idCol), "left_anti")
-      .select(asg.columns.map(col).toIndexedSeq: _*)
-    val centroids = spark.read.parquet(s"$outPath/centroids")
-    swapDir(spark, outPath) { tmp =>
-      kept.write.partitionBy("batch").mode("overwrite").parquet(s"$tmp/assignments")
-      centroids.write.mode("overwrite").parquet(s"$tmp/centroids")
-      // dels subtree recreated empty — the shape readers/the resumed
-      // stream expect; a replayed newest epoch re-lands its partition here
-      mkdirs(spark, s"$tmp/dels")
-    }
-    true
-  }
+      idCol: String = "vec_id"): Boolean =
+    rewriteEpochs(spark, Ivf, outPath, idCol, applyTombstones = true).applied
 
   /** Streaming KMV sketch accumulation — the sketch-family member of the
     * incremental-build trio (BM25 postings, IVF assignments, and now
@@ -799,12 +764,14 @@ object OnlineRefresh {
       k: Int = 16,
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery =
+  ): StreamingQuery = {
+    prepareRoot(spark, outPath) // root swap: compactKmvSketch
     epochStream(spark, inputPath, schema, checkpoint, trigger,
         maxFilesPerTrigger) { (batch, batchId) =>
       graft.ops.Sketches.kmvSketch(batch, groupCol, col(valueCol), k)
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
     }
+  }
 
   /** Streaming QUANTILE sketch accumulation — completes the incremental-
     * build quartet (BM25 postings, IVF assignments, KMV cardinality, and
@@ -827,12 +794,14 @@ object OnlineRefresh {
       k: Int = 16,
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery =
+  ): StreamingQuery = {
+    prepareRoot(spark, outPath) // root swap: compactQuantileSketch
     epochStream(spark, inputPath, schema, checkpoint, trigger,
         maxFilesPerTrigger) { (batch, batchId) =>
       graft.ops.Sketches.quantileSketch(batch, groupCol, col(keyCol), col(valueCol), k)
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
     }
+  }
 
   /** Merge-fold the accumulated per-batch quantile sketches back into one
     * sketch frame per group (still ≤ k pairs each) — feed to
@@ -1030,7 +999,7 @@ object OnlineRefresh {
     }
 
   /** Fold the layout's committed epochs back to the built file count —
-    * [[compactBatchArtifact]] with a z-reclustering fold (frozen-meta
+    * [[rewriteEpochs]] with a z-reclustering fold (frozen-meta
     * re-key + range exchange + in-file sort, so the compacted partition
     * is a proper Z layout, not a concatenation), then FULL index
     * rewrites (every folded file changed — the incremental refreshes'
@@ -1046,7 +1015,7 @@ object OnlineRefresh {
       buckets: Int = 1 << 16
   ): Boolean = graft.fs.Layout.withWriterLease(spark, layoutPath,
       maintenanceHolder("compactZorderLayout")) {
-    // the fold swaps the layout ROOT via compactBatchArtifact (not a
+    // the fold swaps the layout ROOT via rewriteEpochs (not a
     // Layout mutator), so the planner records the rewrite commit itself
     graft.fs.OptimisticCommit.rewriteScope(spark, layoutPath,
       "compactZorderLayout") {
@@ -1062,21 +1031,22 @@ object OnlineRefresh {
     * scan+keying lineage) before the shuffle pass — so the fold source is
     * persisted for the write's duration and both passes read the cache
     * (the [[graft.fs.Layout.withRangeClustered]] rationale; here the write
-    * happens inside compactBatchArtifact, so the cache handle outlives
+    * happens inside rewriteEpochs, so the cache handle outlives
     * the lambda and releases right after the call). */
   private def foldZorderEpochs(spark: SparkSession, layoutPath: String,
       numFiles: Int): Boolean = {
     val (cols, bits, bounds, sbounds) =
       graft.fs.Layout.readLayoutMetaTyped(spark, layoutPath)
     var foldSrc: Option[DataFrame] = None
-    try compactBatchArtifact(spark, layoutPath, { df =>
+    val zfold = EpochFamily(Seq(EpochDir("", { df =>
       val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       foldSrc = Some(cached)
       graft.fs.Layout.zorderKeyWithBoundsTyped(cached, cols, bits, bounds, sbounds)
         .repartitionByRange(numFiles, col("zkey"))
         .sortWithinPartitions(col("zkey"))
         .drop(graft.fs.Layout.zorderWorkCols(cols.size): _*)
-    })
+    })))
+    try rewriteEpochs(spark, zfold, layoutPath, fold = true).folded
     finally foldSrc.foreach(_.unpersist(false))
   }
 
@@ -1295,7 +1265,7 @@ object OnlineRefresh {
       maintenanceHolder("maintainLayout")) {
     // ONE commit per maintenance run — the folds, the drift measure, and
     // whichever rewrite arm acts all fold into it (nested scopes); the
-    // epoch-fold arm swaps the root via compactBatchArtifact, which is
+    // epoch-fold arm swaps the root via rewriteEpochs, which is
     // not a Layout mutator, so the planner-level scope also covers it
     graft.fs.OptimisticCommit.rewriteScope(spark, layoutPath,
       "maintainLayout") {
@@ -1364,27 +1334,30 @@ object OnlineRefresh {
 
   /** BM25-ARTIFACT MAINTENANCE — the [[maintainLayout]] analogue for the
     * retrieval index (the one call a deployment crons between stream
-    * runs): (1) fold committed tombstone epochs physically
-    * ([[applyBm25Tombstones]] — the newest epoch's stay logical, the
-    * replay-safety split; its cross-epoch double-subtract precondition
-    * REFUSES loudly rather than risking wrong stats — re-run after the
-    * next epoch commits); (2) fold the postings/stats epochs past
-    * `maxEpochs` ([[compactBm25Index]] — the exact stats algebra, serve
-    * output pinned unchanged by q_stream_bm25_ret_compacted). Returns
-    * the (action, value) decision receipt, the observability hook. */
+    * runs), ONE [[rewriteEpochs]] pass that (1) applies the committed
+    * tombstone epochs physically (the [[applyBm25Tombstones]] rule — the
+    * newest epoch's stay logical, the replay-safety split; its
+    * cross-epoch double-subtract precondition REFUSES loudly rather than
+    * risking wrong stats — re-run after the next epoch commits) and (2)
+    * folds the postings/stats epochs when more than `maxEpochs` stand
+    * (the [[compactBm25Index]] exact stats algebra, serve output pinned
+    * unchanged by q_stream_bm25_ret_compacted) — so the postings are
+    * rewritten once, not once per step. `epochs_before` counts the
+    * postings epoch dirs the pass starts from. Returns the (action,
+    * value) decision receipt, the observability hook. */
   def maintainBm25Index(spark: SparkSession, outPath: String,
       maxEpochs: Int = 8): DataFrame =
       graft.fs.Layout.withWriterLease(spark, outPath,
         maintenanceHolder("maintainBm25Index")) {
     val report = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    if (applyBm25Tombstones(spark, outPath))
-      report += ("tombstones_applied" -> 1.0)
-    val epochs = epochIds(spark, s"$outPath/postings").size
+    val epochs = epochsOf(spark, Bm25, outPath).size
+    val done = rewriteEpochs(spark, Bm25, outPath, "doc_id",
+      applyTombstones = true, fold = epochs > maxEpochs)
+    if (done.applied) report += ("tombstones_applied" -> 1.0)
     report += ("epochs_before" -> epochs.toDouble)
-    if (epochs > maxEpochs && compactBm25Index(spark, outPath)) {
+    if (done.folded) {
       report += ("compacted" -> 1.0)
-      report += ("epochs_after" ->
-        epochIds(spark, s"$outPath/postings").size.toDouble)
+      report += ("epochs_after" -> epochsOf(spark, Bm25, outPath).size.toDouble)
     }
     import spark.implicits._
     report.toSeq.toDF("action", "value")
@@ -1626,8 +1599,9 @@ object OnlineRefresh {
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
-    // the bank's own swap (compactSpanBank / retractSpanBank) heals first
-    prepareRoot(spark, outPath, "bank", "coverage")
+    // the bank is its own swap root (compactSpanBank / retractSpanBank)
+    prepareRoot(spark, SpanBank.root(outPath))
+    mkdirs(spark, s"$outPath/bank", s"$outPath/coverage")
     val bankSchema = new StructType().add("span_fp", LongType).add("batch", LongType)
     epochStream(spark, inputPath, schema, checkpoint, trigger,
         maxFilesPerTrigger) { (batch, batchId) =>
@@ -1646,8 +1620,8 @@ object OnlineRefresh {
     * ([[graft.ops.Dedup.duplicateSpansAgainst]]'s `standingFps` input).
     * Self-heals a crashed swap first, like every artifact reader. */
   def readSpanBank(spark: SparkSession, outPath: String): DataFrame = {
-    recoverSwap(spark, s"$outPath/bank")
-    spark.read.parquet(s"$outPath/bank")
+    recoverSwap(spark, SpanBank.root(outPath))
+    spark.read.parquet(SpanBank.root(outPath))
       .select(col("span_fp")).distinct()
   }
 
@@ -1659,8 +1633,8 @@ object OnlineRefresh {
     * design), their window fps are re-derived once
     * ([[graft.ops.Dedup.spanFingerprintBank]] — the only text read), and
     * every bank partition anti-joins them away
-    * ([[retractBatchArtifact]] keyed on span_fp — idempotent, crash-safe
-    * swap, composes with [[compactSpanBank]] in either order).
+    * ([[rewriteEpochs]] keyed on span_fp — idempotent, one root swap,
+    * composes with [[compactSpanBank]] in either order).
     *
     * Semantics (what the q_stream_span_retracted oracle replays): the
     * surviving bank is exactly bank ∖ fps(retracted docs) — a SET minus.
@@ -1683,131 +1657,224 @@ object OnlineRefresh {
       idCol: String = "doc_id"): Unit = {
     val fps = graft.ops.Dedup
       .spanFingerprintBank(retractedDocs, width, textCol, idCol)
-    retractBatchArtifact(spark, s"$outPath/bank", fps, "span_fp")
+    rewriteEpochs(spark, SpanBank, outPath, "span_fp", retract = Some(fps))
   }
 
   /** Compact the [[spanBankIngestStream]] bank: fold every committed
     * epoch except the newest into the oldest partition through
     * `distinct()` — the bank is consumed as a SET ([[readSpanBank]]
     * distincts; [[graft.ops.Dedup.duplicateSpansAgainst]] semi-joins), so
-    * the distinct fold satisfies [[compactBatchArtifact]]'s
-    * read(fold(parts)) ≡ read(parts) algebra trivially, and physically
+    * the distinct fold satisfies [[rewriteEpochs]]' read(fold(parts)) ≡
+    * read(parts) algebra trivially, and physically
     * removes the cross-epoch fp repeats that accrete whenever epochs
     * share boilerplate. The newest epoch stays verbatim (the replayable
     * one); the per-epoch `batch < id` standing read keeps working because
     * folded fps keep the OLDEST partition's id — strictly earlier than
     * any future epoch. Run between stream runs, like every compactor. */
   def compactSpanBank(spark: SparkSession, outPath: String): Boolean =
-    compactBatchArtifact(spark, s"$outPath/bank", _.distinct())
+    rewriteEpochs(spark, SpanBank, outPath, fold = true).folded
 
-  // ------------------------------------------------------------ compaction
+  // ------------------------------------------------------ artifact rewrite
   // The streaming builders above accrete one `batch=<id>` partition per
-  // micro-batch forever — correct, but partition/file counts decay read
-  // performance over months of epochs. Compaction merge-folds all COMMITTED
-  // partials into the artifact's oldest partition and rewrites the
-  // directory atomically; the newest partition is deliberately left alone
-  // because it is the only epoch foreachBatch may ever REPLAY (at-least-
-  // once: a batch whose write landed but whose epoch didn't commit re-runs
-  // on restart and overwrites its own `batch=<id>` path — folding it away
-  // would turn that idempotent overwrite into silent double-counting).
-  // Run between stream runs (the builders' file listings must not race the
-  // swap); the checkpoint is untouched, so the stream resumes at the next
-  // epoch id and keeps appending — StreamingSpec pins resume-after-
-  // compaction end-to-end, q_bm25_topk_compacted pins compacted ≡
-  // uncompacted serve output under the oracle.
+  // micro-batch forever. Every change to a standing artifact — compaction,
+  // physical tombstone application, physical retraction, a quantizer
+  // refit — is one [[rewriteEpochs]] call over the family's description
+  // ([[EpochFamily]]) and ONE crash-safe swap of the family's ROOT
+  // ([[graft.fs.AtomicDir.swapDir]]: the whole replacement root is written
+  // to `<root>_tmp`, the live root moves aside to `<root>_old`, tmp moves
+  // in, old drops). No sub-dir is ever swapped on its own, so all tables
+  // of an artifact change together, a crash leaves `<root>` or
+  // `<root>_old` intact, and each public entry point heals with one
+  // `recoverSwap(root)` before it touches the artifact (the recovery
+  // branch inside swapDir alone is unreachable when the caller's own read
+  // touches the missing root first).
+  //
+  // Compaction folds every COMMITTED epoch into the oldest epoch id and
+  // keeps the newest verbatim: the newest is the only epoch foreachBatch
+  // may ever REPLAY (at-least-once: a batch whose write landed but whose
+  // epoch didn't commit re-runs on restart and overwrites its own
+  // `batch=<id>` path — folding it away would turn that idempotent
+  // overwrite into silent double-counting), and a committed target id
+  // means a replayed last epoch can never overwrite the folded mass. A
+  // fold must satisfy read(fold(parts)) ≡ read(parts), which every
+  // artifact proves via its *_merged / sharded oracle query. Run between
+  // stream runs (the builders' file listings must not race the swap); the
+  // checkpoint is untouched, so the stream resumes at the next epoch id —
+  // StreamingSpec pins resume-after-compaction, q_bm25_topk_compacted pins
+  // compacted ≡ uncompacted serve output under the oracle.
 
-  // Every swapped dir here goes through [[graft.fs.AtomicDir]]: `swapDir`
-  // writes the replacement to `<dir>_tmp`, moves the live dir aside to
-  // `<dir>_old`, moves tmp in, drops old — a crash between the renames
-  // leaves dst or dst_old intact. PUBLIC entry points that read or
-  // rewrite a swapped dir call `recoverSwap` FIRST: the recovery branch
-  // inside swapDir alone is unreachable when the caller (e.g.
-  // [[compactBatchArtifact]]'s `spark.read.parquet(dir)`, or any read*
-  // helper) touches the missing dst before the swap runs.
+  /** How a rewrite applies a family's `dels/batch=<id>` tombstones. */
+  private sealed trait TombstoneRule
+  /** The family lands no tombstones. */
+  private case object NoTombstones extends TombstoneRule
+  /** Per-row id anti-join on every epoch, all tombstone epochs dropped:
+    * per-row retraction is idempotent, so even the replayable newest
+    * epoch's tombstones apply (IVF). */
+  private case object IdAntiJoin extends TombstoneRule
+  /** Exact summed subtraction ([[bm25RetractPlans]]) of the COMMITTED
+    * epochs' tombstones; the newest epoch's stay logical, because the
+    * subtraction is not idempotent and that epoch may replay (BM25). */
+  private case object SummedSubtraction extends TombstoneRule
+  /** [[dropLaterTombstoned]] over the folded epochs — applied by a fold
+    * only; the newest epoch's tombstones stay (the corpus retract loops). */
+  private case object LaterTombstone extends TombstoneRule
 
-  /** Compact a `batch=<id>`-partitioned artifact directory: fold every
-    * partition EXCEPT the newest through `fold` (identity for
-    * concatenation-shaped artifacts — postings, IVF assignments; the
-    * exact merge for sketch artifacts) into the OLDEST partition's id,
-    * keep the newest verbatim, swap atomically. The target id must be an
-    * already-committed epoch's (any id < the newest qualifies; the oldest
-    * is used) so a replayed last epoch can never overwrite the compacted
-    * mass. No-op (returns false) with fewer than 3 partitions — with 2,
-    * the non-newest side is a single partition and there is nothing to
-    * fold. Correctness relies on the artifact's merge algebra: fold must
-    * satisfy read(fold(parts)) ≡ read(parts), which every artifact here
-    * proves via its *_merged / sharded oracle query. */
-  def compactBatchArtifact(spark: SparkSession, dir: String,
-      fold: DataFrame => DataFrame = identity): Boolean = {
-    recoverSwap(spark, dir)
-    val df = spark.read.parquet(dir)
-    val ids = df.select(col("batch").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    if (ids.length < 3) return false
-    val newest = ids.last
-    val target = ids.head
-    val compacted = fold(df.where(col("batch") =!= newest).drop("batch"))
-    val latest = df.where(col("batch") === newest).drop("batch")
-    // both plans read `dir` — they execute inside the write step, BEFORE
-    // the swap replaces it
-    swapDir(spark, dir) { tmp =>
-      compacted.write.mode("overwrite").parquet(s"$tmp/batch=$target")
-      latest.write.mode("overwrite").parquet(s"$tmp/batch=$newest")
+  /** One `batch=<id>`-partitioned dir of a family: its path under the
+    * root ("" = the root itself) and the fold merging committed epochs. */
+  private final case class EpochDir(sub: String,
+      fold: DataFrame => DataFrame = identity)
+
+  /** An epoch-artifact family: its epoch dirs (epochs are listed from the
+    * first; the others are rewritten when present), the fixed tables a
+    * rewrite carries verbatim unless refit, its tombstone rule, and where
+    * its swap root sits under the artifact path. */
+  private final case class EpochFamily(dirs: Seq[EpochDir],
+      fixed: Seq[String] = Nil, tombstones: TombstoneRule = NoTombstones,
+      rootSub: String = "") {
+    def root(outPath: String): String = under(outPath, rootSub)
+  }
+
+  private def under(dir: String, sub: String): String =
+    if (sub.isEmpty) dir else s"$dir/$sub"
+
+  /** A BM25 stats row's `avgdl`, re-derived from its exact sums. */
+  private def avgdl: Column = when(col("n") > 0,
+    col("sdl").cast("double") / col("n").cast("double")).otherwise(lit(0d)).as("avgdl")
+
+  private val Bm25 = EpochFamily(Seq(EpochDir("postings"), EpochDir("stats",
+      _.agg(sum(col("n")).as("n"), sum(col("sdl")).as("sdl"))
+        .select(col("n"), avgdl, col("sdl")))),
+    tombstones = SummedSubtraction)
+  private val Ivf = EpochFamily(Seq(EpochDir("assignments")), Seq("centroids"), IdAntiJoin)
+  private val Pq = EpochFamily(Seq(EpochDir("codes")), Seq("codebooks"))
+  private val RetractCorpus = EpochFamily(Seq(EpochDir("docs"), EpochDir("sigs")),
+    tombstones = LaterTombstone)
+  private val SpanBank = EpochFamily(Seq(EpochDir("", _.distinct())), rootSub = "bank")
+  private def kmvFamily(groupCol: String, k: Int) = EpochFamily(
+    Seq(EpochDir("", graft.ops.Sketches.kmvMerge(_, groupCol, k))))
+  private def quantileFamily(groupCol: String, k: Int) = EpochFamily(
+    Seq(EpochDir("", graft.ops.Sketches.quantileMerge(_, groupCol, k))))
+
+  /** What one [[rewriteEpochs]] call did. */
+  private final case class Rewrite(applied: Boolean, folded: Boolean)
+
+  /** Heal `fam`'s root after a crashed swap, then list its epochs. */
+  private def epochsOf(spark: SparkSession, fam: EpochFamily,
+      outPath: String): Seq[Long] = {
+    val root = fam.root(outPath)
+    recoverSwap(spark, root)
+    epochIds(spark, under(root, fam.dirs.head.sub))
+  }
+
+  /** THE rewrite step of every epoch-artifact family: heal the root, list
+    * its epochs from directory names, build each epoch dir's replacement
+    * — the committed tombstones applied by the family's rule
+    * (`applyTombstones`), a physical retraction id set subtracted on
+    * `idCol` (`retract`), every committed epoch folded into the oldest id
+    * (`fold`, from 3 epochs on: with 2, nothing non-newest is left to
+    * merge) — and each fixed table (a `refit` replacement, else carried
+    * verbatim), then swap the root ONCE. `refit` may also replace an epoch
+    * dir's `batch`-columned source (a quantizer refit re-assigns every
+    * row). Every plan reads the live root and runs inside the swap's
+    * write, before the root moves. Nothing is swapped when no asked-for
+    * step has work: no epoch, no tombstone pending, fewer than 3 epochs to
+    * fold, nothing retracted or refit. */
+  private def rewriteEpochs(spark: SparkSession, fam: EpochFamily,
+      outPath: String, idCol: String = "", applyTombstones: Boolean = false,
+      fold: Boolean = false, retract: Option[DataFrame] = None,
+      refit: Map[String, DataFrame] = Map.empty): Rewrite = {
+    val root = fam.root(outPath)
+    val epochs = epochsOf(spark, fam, outPath)
+    if (epochs.isEmpty) return Rewrite(applied = false, folded = false)
+    val newest = epochs.last
+    val folds = fold && epochs.size >= 3
+    val dels = if (fam.tombstones == NoTombstones) None else standingDels(spark, root)
+    if (fam.tombstones == SummedSubtraction)
+      retract.foreach(refuseTombstoned(dels, _, idCol))
+    // the tombstoned ids this rewrite subtracts; the later-tombstone rule
+    // applies per (id, epoch) inside the fold instead
+    val tombstoned = if (!applyTombstones) None else fam.tombstones match {
+      case IdAntiJoin => dels.map(_.select(col(idCol))).filterNot(_.isEmpty)
+      case SummedSubtraction => dels.flatMap(committedTombstones(_, newest, idCol))
+      case _ => None
     }
-    true
+    val laterDels =
+      if (!(applyTombstones && folds && fam.tombstones == LaterTombstone)) None
+      else dels.map(_.select(col(idCol).as("__del_id"),
+          col("batch").cast("long").as("__del_batch"))
+        .where(col("__del_batch") < lit(newest)))
+    val applied = tombstoned.nonEmpty || laterDels.nonEmpty
+    if (!applied && !folds && retract.isEmpty && refit.isEmpty)
+      return Rewrite(applied = false, folded = false)
+    val present = fam.dirs.filter(d =>
+      d == fam.dirs.head || pathExists(spark, under(root, d.sub)))
+    val src = present.map(d =>
+      d.sub -> refit.getOrElse(d.sub, spark.read.parquet(under(root, d.sub)))).toMap
+    val rows = (tombstoned ++ retract.map(_.select(col(idCol))))
+        .reduceOption(_ union _) match {
+      case None => src
+      case Some(ids) if fam.tombstones == SummedSubtraction =>
+        val (postings, stats) =
+          bm25RetractPlans(spark, src("postings"), src("stats"), ids, idCol)
+        Map("postings" -> postings, "stats" -> stats)
+      case Some(ids) => src.map { case (sub, df) =>
+        sub -> df.join(broadcast(ids.distinct()), Seq(idCol), "left_anti")
+          .select(df.columns.map(col).toIndexedSeq: _*)
+      }
+    }
+    swapDir(spark, root) { tmp =>
+      for (d <- present; df = rows(d.sub); dir = under(tmp, d.sub)) {
+        if (!folds) df.write.partitionBy("batch").mode("overwrite").parquet(dir)
+        else {
+          val committed = df.where(col("batch") =!= newest)
+          d.fold(laterDels.fold(committed)(dropLaterTombstoned(committed, _, idCol))
+              .drop("batch"))
+            .write.mode("overwrite").parquet(s"$dir/batch=${epochs.head}")
+          df.where(col("batch") === newest).drop("batch")
+            .write.mode("overwrite").parquet(s"$dir/batch=$newest")
+        }
+      }
+      for (t <- fam.fixed) refit.get(t) match {
+        case Some(df) => df.write.mode("overwrite").parquet(s"$tmp/$t")
+        case None => copyDir(spark, s"$root/$t", s"$tmp/$t")
+      }
+      // tombstones: carried verbatim, emptied (every epoch applied — the
+      // shape readers and the resumed stream expect), or cut to the
+      // newest epoch's (still logical)
+      if (!applied) copyDir(spark, s"$root/dels", s"$tmp/dels")
+      else if (fam.tombstones == IdAntiJoin) mkdirs(spark, s"$tmp/dels")
+      else dels.get.where(col("batch").cast("long") === newest).drop("batch")
+        .write.mode("overwrite").parquet(s"$tmp/dels/batch=$newest")
+    }
+    Rewrite(applied, folds)
   }
 
   /** Compact the [[buildBm25IndexStream]] artifact: postings concatenate
     * (per-(doc, token) rows — identity fold), stats fold by the
     * [[graft.ops.TextAnalysis.bm25IndexMerge]] exact-integer-sum algebra
     * (n = Σnᵢ, sdl = Σsdlᵢ, avgdl re-derived — bit-identical to the
-    * monolithic build, which is why compacted serve output cannot move). */
-  def compactBm25Index(spark: SparkSession, outPath: String): Boolean = {
-    recoverSwap(spark, outPath) // root swap: retractBm25Artifact
-    val p = compactBatchArtifact(spark, s"$outPath/postings")
-    val st = compactBatchArtifact(spark, s"$outPath/stats", d => d
-      .agg(sum(col("n")).as("n"), sum(col("sdl")).as("sdl"))
-      .select(col("n"), when(col("n") > 0,
-        col("sdl").cast("double") / col("n").cast("double")).otherwise(lit(0d)).as("avgdl"),
-        col("sdl")))
-    p || st
-  }
+    * monolithic build, which is why compacted serve output cannot move).
+    * Both tables move under the one root swap. */
+  def compactBm25Index(spark: SparkSession, outPath: String): Boolean =
+    rewriteEpochs(spark, Bm25, outPath, fold = true).folded
 
   /** Compact the [[buildIvfIndexStream]] assignment shards (per-row, no
     * cross-row terms — identity fold; centroids are one fixed table). */
-  def compactIvfIndex(spark: SparkSession, outPath: String): Boolean = {
-    recoverSwap(spark, outPath) // root swap: applyIvfTombstones
-    compactBatchArtifact(spark, s"$outPath/assignments")
-  }
+  def compactIvfIndex(spark: SparkSession, outPath: String): Boolean =
+    rewriteEpochs(spark, Ivf, outPath, fold = true).folded
 
-  /** RETRACT ids from a `batch=<id>`-partitioned PER-ROW artifact — IVF
-    * assignment shards, MinHash signature/docs partitions, anything whose
-    * rows carry no cross-row sums: one anti-join preserving the batch
-    * column, one crash-safe swap. Because nothing is subtracted, the
-    * operation is IDEMPOTENT (re-applying a deletion batch is a no-op) —
-    * the property the BM25 artifact, whose stats row carries exact sums,
-    * fundamentally cannot have ([[retractBm25Artifact]]'s exactly-once
-    * contract). Composes with [[compactBatchArtifact]] in either order. */
-  def retractBatchArtifact(spark: SparkSession, dir: String,
-      ids: DataFrame, idCol: String): Unit = {
-    recoverSwap(spark, dir)
-    val d = ids.select(col(idCol)).distinct()
-    val src = spark.read.parquet(dir)
-    val kept = src.join(broadcast(d), Seq(idCol), "left_anti")
-      .select(src.columns.map(col).toIndexedSeq: _*)
-    swapDir(spark, dir)(tmp =>
-      kept.write.partitionBy("batch").mode("overwrite").parquet(tmp))
-  }
-
-  /** [[retractBatchArtifact]] over the [[buildIvfIndexStream]] assignment
-    * shards — the streamed-artifact form of
-    * [[graft.ops.Similarity.ivfRetract]] (per-epoch `ivfAssign(shard ∖ D)`
-    * exactly, since assignment is per-row; centroids stay fixed). */
+  /** RETRACT ids from the [[buildIvfIndexStream]] assignment shards — the
+    * streamed-artifact form of [[graft.ops.Similarity.ivfRetract]]
+    * (per-epoch `ivfAssign(shard ∖ D)` exactly, since assignment is
+    * per-row; centroids stay fixed): one anti-join keeping the batch
+    * column. Because nothing is subtracted, the operation is IDEMPOTENT
+    * (re-applying a deletion batch is a no-op) — the property the BM25
+    * artifact, whose stats row carries exact sums, fundamentally cannot
+    * have ([[retractBm25Artifact]]'s exactly-once contract). Composes with
+    * [[compactIvfIndex]] in either order. */
   def retractIvfArtifact(spark: SparkSession, outPath: String,
-      vecIds: DataFrame, idCol: String = "vec_id"): Unit = {
-    recoverSwap(spark, outPath) // root swap: applyIvfTombstones
-    retractBatchArtifact(spark, s"$outPath/assignments", vecIds, idCol)
-  }
+      vecIds: DataFrame, idCol: String = "vec_id"): Unit =
+    rewriteEpochs(spark, Ivf, outPath, idCol, retract = Some(vecIds))
 
   /** Compact a retract-loop corpus artifact
     * ([[minhashIngestRetractStream]] / [[dedupIngestRetractStream]] —
@@ -1818,8 +1885,7 @@ object OnlineRefresh {
     * applied tombstone partitions are dropped — the LSM merge step that
     * keeps delete markers from accumulating forever. The newest epoch of
     * every subtree is kept verbatim (the only foreachBatch-replayable
-    * one — the [[compactBatchArtifact]] argument), and all three
-    * subtrees move under ONE crash-safe swap of the artifact ROOT.
+    * one), all under [[rewriteEpochs]]' one root swap.
     *
     * Correctness: a tombstone at epoch t applies to docs with arrival
     * batch < t, so every tombstone OLDER than the newest epoch is fully
@@ -1833,40 +1899,9 @@ object OnlineRefresh {
     * filters see the folded mass at the oldest id, all of which is
     * < any fresh epoch. No-op (false) with fewer than 3 doc epochs. */
   def compactRetractedCorpus(spark: SparkSession, outPath: String,
-      idCol: String = "doc_id"): Boolean = {
-    recoverSwap(spark, outPath)
-    val docEpochs = epochIds(spark, s"$outPath/docs")
-    if (docEpochs.length < 3) return false
-    val newest = docEpochs.last
-    val target = docEpochs.head
-    val dels = spark.read.parquet(s"$outPath/dels")
-      .select(col(idCol).as("__del_id"), col("batch").cast("long").as("__del_batch"))
-    // tombstones OLDER than the newest epoch are fully applied by the fold
-    val oldDels = dels.where(col("__del_batch") < lit(newest))
-    def foldWithDels(sub: String): (DataFrame, DataFrame) = {
-      val df = spark.read.parquet(s"$outPath/$sub")
-      val folded = dropLaterTombstoned(df.where(col("batch") =!= newest),
-        oldDels, idCol).drop("batch")
-      (folded, df.where(col("batch") === newest).drop("batch"))
-    }
-    val (docsFolded, docsNewest) = foldWithDels("docs")
-    val sigs = if (pathExists(spark, s"$outPath/sigs")) Some(foldWithDels("sigs")) else None
-    val newestDels = spark.read.parquet(s"$outPath/dels")
-      .where(col("batch").cast("long") === newest).drop("batch")
-    swapDir(spark, outPath) { tmp =>
-      docsFolded.write.mode("overwrite").parquet(s"$tmp/docs/batch=$target")
-      docsNewest.write.mode("overwrite").parquet(s"$tmp/docs/batch=$newest")
-      sigs.foreach { case (f, n) =>
-        f.write.mode("overwrite").parquet(s"$tmp/sigs/batch=$target")
-        n.write.mode("overwrite").parquet(s"$tmp/sigs/batch=$newest")
-      }
-      // applied tombstones drop; the newest epoch's (replayable) survive —
-      // an empty write still creates the dels subtree readers expect
-      newestDels.write.mode("overwrite").parquet(s"$tmp/dels/batch=$newest")
-      ()
-    }
-    true
-  }
+      idCol: String = "doc_id"): Boolean =
+    rewriteEpochs(spark, RetractCorpus, outPath, idCol, applyTombstones = true,
+      fold = true).folded
 
   /** RETRACT a document set from the `batch=<id>`-partitioned STREAMED
     * BM25 artifact in place — [[graft.ops.TextAnalysis.bm25IndexRetract]]
@@ -1890,53 +1925,67 @@ object OnlineRefresh {
     * silently skew that epoch's stats. Violations throw rather than
     * half-apply. Exactly-once per deletion batch is the caller's duty
     * (the bm25IndexRetract contract); postings and stats are rewritten
-    * under ONE crash-safe swap of the artifact ROOT (both tables replaced
+    * under [[rewriteEpochs]]' one root swap (both tables replaced
     * atomically — a two-swap version would leave a crash window where
     * postings are retracted but stats are not, unrecoverable because the
     * removed tf mass is only derivable from the pre-retraction postings).
     * Run between stream runs, like compaction.
     *
     * On a dels-bearing artifact ([[buildBm25IndexRetractStream]]'s) the
-    * tombstone subtree is carried through the swap VERBATIM — an earlier
-    * version silently dropped it, after which [[readBm25IndexRetracted]]
-    * threw on the missing path (or a restarted stream recreated it empty
-    * and served deleted docs resurfaced). `docIds` must then be DISJOINT
-    * from the standing tombstone ids (enforced — throws): a tombstoned id
-    * retracted physically here would be subtracted a second time when the
-    * carried-through logical tombstone is applied at serve; physical
-    * application of existing tombstones is [[applyBm25Tombstones]]'s job. */
+    * tombstone subtree is carried through the swap VERBATIM, and `docIds`
+    * must be DISJOINT from the standing tombstone ids (enforced — throws):
+    * a tombstoned id retracted physically here would be subtracted a
+    * second time when the carried-through logical tombstone is applied at
+    * serve; physical application of existing tombstones is
+    * [[applyBm25Tombstones]]'s job. */
   def retractBm25Artifact(spark: SparkSession, outPath: String,
-      docIds: DataFrame, idCol: String = "doc_id"): Unit = {
-    recoverSwap(spark, outPath)
-    val dels = standingDels(spark, outPath)
-    dels.foreach { d =>
-      val overlap = d.select(col(idCol))
-        .join(broadcast(docIds.select(col(idCol)).distinct()), Seq(idCol), "left_semi")
-        .limit(1).count()
-      require(overlap == 0L,
-        "bm25 artifact retraction: docIds overlap standing tombstones — the " +
-          "carried-through logical tombstone would double-subtract stats at " +
-          "serve; apply existing tombstones with applyBm25Tombstones instead")
-    }
-    val (newPostings, newStats) = bm25RetractPlans(spark, outPath, docIds, idCol)
-    // all writes execute inside swapDir against the still-intact old dirs
-    // (tmp is fully written before any rename), then ONE atomic swap
-    swapDir(spark, outPath) { tmp =>
-      newPostings.write.partitionBy("batch").mode("overwrite").parquet(s"$tmp/postings")
-      newStats.write.partitionBy("batch").mode("overwrite").parquet(s"$tmp/stats")
-      dels.foreach(_.write.partitionBy("batch").mode("overwrite").parquet(s"$tmp/dels"))
-    }
+      docIds: DataFrame, idCol: String = "doc_id"): Unit =
+    rewriteEpochs(spark, Bm25, outPath, idCol, retract = Some(docIds))
+
+  /** Summed subtraction's refusal for a physical retraction: a standing
+    * tombstone id retracted here would be subtracted again when its
+    * carried-through logical tombstone applies at serve. */
+  private def refuseTombstoned(dels: Option[DataFrame], docIds: DataFrame,
+      idCol: String): Unit = dels.foreach { d =>
+    val overlap = d.select(col(idCol))
+      .join(broadcast(docIds.select(col(idCol)).distinct()), Seq(idCol), "left_semi")
+      .limit(1).count()
+    require(overlap == 0L,
+      "bm25 artifact retraction: docIds overlap standing tombstones — the " +
+        "carried-through logical tombstone would double-subtract stats at " +
+        "serve; apply existing tombstones with applyBm25Tombstones instead")
   }
 
-  /** The per-epoch exact-subtraction plans shared by [[retractBm25Artifact]]
-    * and [[applyBm25Tombstones]]: (retracted postings, retracted stats),
-    * both still `batch`-columned. Throws if any deletion id owns no
-    * postings row (unattributable to an epoch). Callers execute the plans
-    * inside their [[swapDir]] write, against the still-intact old dirs. */
-  private def bm25RetractPlans(spark: SparkSession, outPath: String,
-      docIds: DataFrame, idCol: String): (DataFrame, DataFrame) = {
+  /** The COMMITTED epochs' tombstone ids (batch < `newest`), or None when
+    * there are none. Refuses an id tombstoned in both a committed and the
+    * newest epoch: once the committed copy is applied physically, the
+    * still-logical duplicate would subtract the doc's stats a second time
+    * at serve (duplicates WITHIN the committed epochs, or within the
+    * newest, collapse fine). One broadcast semi-join. */
+  private def committedTombstones(dels: DataFrame, newest: Long,
+      idCol: String): Option[DataFrame] = {
+    val oldIds = dels.where(col("batch").cast("long") < newest).select(col(idCol))
+    if (oldIds.isEmpty) return None
+    val crossEpoch = dels.where(col("batch").cast("long") === newest)
+      .select(col(idCol))
+      .join(broadcast(oldIds.distinct()), Seq(idCol), "left_semi")
+      .limit(1).count()
+    require(crossEpoch == 0L,
+      "bm25 tombstone apply: an id appears in both a committed and the newest " +
+        "tombstone epoch — its committed copy applied physically here plus the " +
+        "still-logical newest copy at serve would double-subtract stats; wait " +
+        "for the next epoch to commit (or drop the duplicate) before applying")
+    Some(oldIds)
+  }
+
+  /** The per-epoch exact-subtraction plans of a BM25 rewrite: (retracted
+    * postings, retracted stats), both still `batch`-columned. Throws if
+    * any deletion id owns no postings row (unattributable to an epoch).
+    * [[rewriteEpochs]] executes the plans inside its swap's write, against
+    * the still-intact old root. */
+  private def bm25RetractPlans(spark: SparkSession, postings: DataFrame,
+      stats: DataFrame, docIds: DataFrame, idCol: String): (DataFrame, DataFrame) = {
     val ids = docIds.select(col(idCol)).distinct()
-    val postings = spark.read.parquet(s"$outPath/postings")
     val nIds = ids.count()
     // ONE pass over the postings for both the attribution check and the
     // per-epoch removed mass (they used to be two separate scans): a
@@ -1957,14 +2006,12 @@ object OnlineRefresh {
     val removed = spark.createDataFrame(
       java.util.Arrays.asList(rolledRows.filter(!_.isNullAt(0)): _*),
       rolled.schema)
-    val newStats = spark.read.parquet(s"$outPath/stats")
+    val newStats = stats
       .join(removed, Seq("batch"), "left")
       .select(col("batch"),
         (col("n") - coalesce(col("__rn"), lit(0L))).as("n"),
         (col("sdl") - coalesce(col("__rsdl"), lit(0L))).as("sdl"))
-      .select(col("batch"), col("n"), when(col("n") > 0,
-        col("sdl").cast("double") / col("n").cast("double")).otherwise(lit(0d)).as("avgdl"),
-        col("sdl"))
+      .select(col("batch"), col("n"), avgdl, col("sdl"))
     val newPostings = postings.join(broadcast(ids), Seq(idCol), "left_anti")
       .select(col("token"), col(idCol), col("tf"), col("dl"), col("batch"))
     (newPostings, newStats)
@@ -1987,16 +2034,14 @@ object OnlineRefresh {
     * the compacted mass cannot perturb the estimate). */
   def compactKmvSketch(spark: SparkSession, outPath: String, groupCol: String,
       k: Int = 16): Boolean =
-    compactBatchArtifact(spark, outPath,
-      d => graft.ops.Sketches.kmvMerge(d, groupCol, k))
+    rewriteEpochs(spark, kmvFamily(groupCol, k), outPath, fold = true).folded
 
   /** Compact the [[buildQuantileSketchStream]] artifact
     * ([[graft.ops.Sketches.quantileMerge]] — same overlap-tolerant
     * algebra over (pri, v) pairs). */
   def compactQuantileSketch(spark: SparkSession, outPath: String, groupCol: String,
       k: Int = 16): Boolean =
-    compactBatchArtifact(spark, outPath,
-      d => graft.ops.Sketches.quantileMerge(d, groupCol, k))
+    rewriteEpochs(spark, quantileFamily(groupCol, k), outPath, fold = true).folded
 
   /** The MinHash (Jaccard-criterion) twin of [[dedupIncrementalStream]],
     * closing the artifact-maintenance half of the incremental story: each
@@ -2185,7 +2230,7 @@ object OnlineRefresh {
     * `batch` column. */
   def readRetractedCorpus(spark: SparkSession, outPath: String,
       idCol: String = "doc_id"): DataFrame = {
-    recoverSwap(spark, outPath) // root swap: compactRetractedCorpus
+    recoverSwap(spark, outPath)
     val dels = spark.read.parquet(s"$outPath/dels")
       .select(col(idCol).as("__del_id"), col("batch").as("__del_batch"))
     dropLaterTombstoned(spark.read.parquet(s"$outPath/docs"), dels, idCol)
@@ -2303,45 +2348,19 @@ object OnlineRefresh {
     * NOT idempotent, a replay re-landing tombstones whose mass had
     * already been subtracted would double-count — keeping them logical
     * keeps the replay harmless (tombstone overwrite + unchanged
-    * artifact). Postings, stats, AND the pruned dels move under ONE
-    * atomic root swap; serve output is invariant
+    * artifact). Postings, stats, AND the pruned dels move under
+    * [[rewriteEpochs]]' one root swap; serve output is invariant
     * (q_stream_bm25_ret_compacted pins it). Ids without postings rows
     * (e.g. a tombstone racing its doc — out of contract for the stream)
     * throw, as in [[retractBm25Artifact]]. PRECONDITION (enforced — one
     * broadcast semi-join, throws on violation): no id appears in BOTH a
-    * committed and the newest tombstone epoch — once the committed copy
-    * is applied physically, the still-logical duplicate would subtract
-    * the doc's stats a second time at serve (the bm25IndexRetract
-    * non-idempotence; duplicate ids WITHIN the committed epochs, or
-    * within the newest, collapse fine — a silent failure before r13,
-    * since the postings anti-join no-ops on the second application). Run
-    * between stream runs; compose with [[compactBm25Index]] afterwards
-    * to fold partitions. */
+    * committed and the newest tombstone epoch ([[committedTombstones]]).
+    * Run between stream runs; compose with [[compactBm25Index]]
+    * afterwards to fold partitions — or run both in one rewrite with
+    * [[maintainBm25Index]]. */
   def applyBm25Tombstones(spark: SparkSession, outPath: String,
-      idCol: String = "doc_id"): Boolean = {
-    recoverSwap(spark, outPath)
-    val newest = epochIds(spark, s"$outPath/postings").lastOption.getOrElse(return false)
-    val delsAll = spark.read.parquet(s"$outPath/dels")
-    val oldIds = delsAll.where(col("batch").cast("long") < newest).select(col(idCol))
-    if (oldIds.isEmpty) return false
-    val crossEpoch = delsAll.where(col("batch").cast("long") === newest)
-      .select(col(idCol))
-      .join(broadcast(oldIds.distinct()), Seq(idCol), "left_semi")
-      .limit(1).count()
-    require(crossEpoch == 0L,
-      "bm25 tombstone apply: an id appears in both a committed and the newest " +
-        "tombstone epoch — its committed copy applied physically here plus the " +
-        "still-logical newest copy at serve would double-subtract stats; wait " +
-        "for the next epoch to commit (or drop the duplicate) before applying")
-    val (newPostings, newStats) = bm25RetractPlans(spark, outPath, oldIds, idCol)
-    val newestDels = delsAll.where(col("batch").cast("long") === newest).drop("batch")
-    swapDir(spark, outPath) { tmp =>
-      newPostings.write.partitionBy("batch").mode("overwrite").parquet(s"$tmp/postings")
-      newStats.write.partitionBy("batch").mode("overwrite").parquet(s"$tmp/stats")
-      newestDels.write.mode("overwrite").parquet(s"$tmp/dels/batch=$newest")
-    }
-    true
-  }
+      idCol: String = "doc_id"): Boolean =
+    rewriteEpochs(spark, Bm25, outPath, idCol, applyTombstones = true).applied
 
   /** A feature observation keyed by entity; `id` is the deterministic
     * tie-break for equal timestamps (mirrors the batch path's

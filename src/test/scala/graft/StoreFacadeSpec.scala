@@ -184,6 +184,18 @@ class StoreFacadeSpec extends SparkSpec {
     assert(offline.expireOlderThan("aqi_info", java.time.LocalDate.of(2025, 5, 2)) == 1)
     val expired = agrees("expireOlderThan")
     assert(expired.keySet == Set("a", "b"), "a key whose rows all expired leaves the snapshot")
+
+    // a day's files deleted with its dir kept: the listing still names the
+    // dir, now empty, and its rows must leave the snapshot as an expired
+    // day's do
+    land(offline, ("c", "2025-05-03 01:00:00", 8.0, 8L))
+    assert(aqi(agrees("new day"), "c") == 8.0)
+    val day = new org.apache.hadoop.fs.Path(s"${offline.root}/aqi_info/year=2025/month=5/day=3")
+    val hfs = day.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    hfs.listStatus(day).foreach(f => assert(hfs.delete(f.getPath, false)))
+    assert(hfs.exists(day) && hfs.listStatus(day).isEmpty)
+    assert(agrees("a day emptied in place").keySet == Set("a", "b"),
+      "a key whose only day was emptied in place leaves the snapshot")
   }
 
   test("refreshOnline keeps the snapshot's columns when an append adds one") {

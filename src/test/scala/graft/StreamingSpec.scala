@@ -1225,21 +1225,21 @@ class StreamingSpec extends SparkSpec {
       OnlineRefresh.readBm25Index(spark, s"$tmp/ix"), qs, k = 6)
       .as[(String, Long, Double, Int)].collect().sorted.toSeq
     val before = serve()
-    // crash window: dst renamed aside, replacement never moved in — the
-    // state a kill between swapDir's two renames leaves behind
+    // crash window: the root renamed aside, replacement never moved in —
+    // the state a kill between swapDir's two renames leaves behind (the
+    // root is the only swap unit, so no sub-dir can be left half-swapped)
     def simulateCrash(dir: String): Unit = {
       assert(new java.io.File(dir).renameTo(new java.io.File(dir + "_old")))
       assert(!new java.io.File(dir).exists())
     }
-    simulateCrash(s"$tmp/ix/postings")
-    assert(serve() == before, "readBm25Index must self-heal a half-swapped postings dir")
-    simulateCrash(s"$tmp/ix/stats")
+    simulateCrash(s"$tmp/ix")
+    assert(serve() == before, "readBm25Index must self-heal a half-swapped artifact root")
+    simulateCrash(s"$tmp/ix")
     assert(OnlineRefresh.compactBm25Index(spark, s"$tmp/ix"),
       "compactBm25Index must self-heal, then compact 4 epochs")
     assert(serve() == before, "healed-then-compacted serve moved")
-    // root-level swap (retractBm25Artifact) crash: same self-heal contract
     simulateCrash(s"$tmp/ix")
-    assert(serve() == before, "readBm25Index must self-heal a half-swapped artifact root")
+    assert(serve() == before, "readBm25Index must self-heal the compacted root")
   }
 
   test("IVF compaction: served top-k unchanged, stream resumes and appends") {
@@ -1278,7 +1278,7 @@ class StreamingSpec extends SparkSpec {
     assert(serve(emb) == mono, "resumed-after-compaction index diverged from monolithic")
   }
 
-  test("retractBatchArtifact: idempotent, composes with compaction in either order") {
+  test("IVF per-row retraction: idempotent, composes with compaction in either order") {
     import org.apache.spark.sql.functions.col
     val tmp = Files.createTempDirectory("graft-sivfrt").toString
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -1791,9 +1791,10 @@ class StreamingSpec extends SparkSpec {
     val r1 = actions(OnlineRefresh.maintainBm25Index(spark, s"$tmp/ix",
       maxEpochs = 2))
     assert(r1("tombstones_applied") == 1.0 && r1("compacted") == 1.0, s"$r1")
-    // epochs_before reads AFTER the fold: the apply's rewrite drops the
-    // del-only epochs' empty postings partitions (5 staged → 3 non-empty)
-    assert(r1("epochs_before") == 3.0 && r1("epochs_after") == 2.0, s"$r1")
+    // epochs_before counts the postings epoch dirs the one rewrite starts
+    // from, the del-only epochs' empty ones included (5 staged); the fold
+    // leaves the oldest and the newest
+    assert(r1("epochs_before") == 5.0 && r1("epochs_after") == 2.0, s"$r1")
     assert(serve() == direct, "maintenance moved the served scores")
     // second run: nothing pending, epochs under the ceiling — measure-only
     val r2 = actions(OnlineRefresh.maintainBm25Index(spark, s"$tmp/ix",
@@ -1929,5 +1930,158 @@ class StreamingSpec extends SparkSpec {
     assert(eD.getMessage.contains("drop or duplicate"), eD.getMessage)
     // neither refusal touched the artifact
     assert(ids() == all, "a refused retrain must not move the indexed set")
+  }
+
+  test("crash recovery: every artifact family's reader and mutators heal a half-swapped root") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val docs = tinyOpCorpus()
+    val rnd = new scala.util.Random(5)
+    val vecs = (1L to 24L).map(i => (i, Seq.fill(4)(rnd.nextDouble().toFloat)))
+    val emb = vecs.toDF("vec_id", "embedding")
+    def insv(rows: Seq[(Long, Seq[Float])]) = rows.toDF("vec_id", "embedding")
+      .select(lit("ins").as("op"), col("vec_id"), col("embedding"))
+    def delv(ids: Seq[Long]) = ids.toDF("vec_id").select(lit("del").as("op"),
+      col("vec_id"), lit(null).cast("array<float>").as("embedding"))
+    def textStages = Seq(docs.take(2), docs.slice(2, 4), docs.slice(4, 6), docs.drop(6))
+      .map(_.toDF("doc_id", "text"))
+    val noDocs = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val noIds = Seq.empty[Long].toDF("vec_id")
+    val qs = Seq(("qa", "customer stream table")).toDF("query_id", "query")
+    def run(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = q.awaitTermination()
+    def tmp(name: String) = Files.createTempDirectory(s"graft-crash-$name").toString
+    // (family, swap root, serve, mutators): each artifact holds 4 epochs
+    val families: Seq[(String, String, () => Seq[String], Seq[(String, () => Any)])] = Seq({
+      val t = tmp("bm25")
+      val schema = stageOps(s"$t/src", Seq(insDf(docs.take(3)), delDf(Seq(2L)),
+        insDf(docs.slice(3, 6)), insDf(docs.drop(6))))
+      run(OnlineRefresh.buildBm25IndexRetractStream(spark, s"$t/src", schema,
+        s"$t/ix", s"$t/ck", maxFilesPerTrigger = Some(1)))
+      ("bm25", s"$t/ix", () => TextAnalysis.bm25TopKFromIndex(
+          OnlineRefresh.readBm25IndexRetracted(spark, s"$t/ix"), qs, k = 8)
+        .collect().map(_.toString).sorted.toSeq, Seq(
+        "retractBm25Artifact" -> (() => OnlineRefresh.retractBm25Artifact(spark, s"$t/ix", noDocs)),
+        "applyBm25Tombstones" -> (() => OnlineRefresh.applyBm25Tombstones(spark, s"$t/ix")),
+        "compactBm25Index" -> (() => OnlineRefresh.compactBm25Index(spark, s"$t/ix")),
+        "maintainBm25Index" -> (() => OnlineRefresh.maintainBm25Index(spark, s"$t/ix"))))
+    }, {
+      val t = tmp("ivf")
+      val schema = stageOps(s"$t/src", Seq(insv(vecs.take(8)), delv(Seq(3L)),
+        insv(vecs.slice(8, 16)), insv(vecs.drop(16))))
+      run(OnlineRefresh.buildIvfIndexRetractStream(spark, s"$t/src", schema, s"$t/ix",
+        s"$t/ck", graft.ops.Similarity.ivfIndex(emb, nLists = 4).centroids,
+        maxFilesPerTrigger = Some(1)))
+      ("ivf", s"$t/ix", () => OnlineRefresh.readIvfIndexRetracted(spark, s"$t/ix")
+        .assignments.select("vec_id").collect().map(_.toString).sorted.toSeq, Seq(
+        "retractIvfArtifact" -> (() => OnlineRefresh.retractIvfArtifact(spark, s"$t/ix", noIds)),
+        "applyIvfTombstones" -> (() => OnlineRefresh.applyIvfTombstones(spark, s"$t/ix")),
+        "compactIvfIndex" -> (() => OnlineRefresh.compactIvfIndex(spark, s"$t/ix")),
+        "recenterIvfIndex" -> (() => OnlineRefresh.recenterIvfIndex(spark, s"$t/ix", emb, nLists = 4)),
+        "maintainIvfIndex" -> (() => OnlineRefresh.maintainIvfIndex(spark, s"$t/ix", emb, nLists = 4))))
+    }, {
+      val t = tmp("pq")
+      val pqEmb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+      pqEmb.repartition(4).write.parquet(s"$t/src")
+      val schema = spark.read.parquet(s"$t/src").schema
+      run(OnlineRefresh.buildPqIndexStream(spark, s"$t/src", schema, s"$t/ix", s"$t/ck",
+        graft.ops.Similarity.pqCodebookTable(pqEmb), maxFilesPerTrigger = Some(1)))
+      ("pq", s"$t/ix", () => OnlineRefresh.readPqIndex(spark, s"$t/ix")
+        .codes.select("vec_id").collect().map(_.toString).sorted.toSeq, Seq(
+        "retractPqArtifact" -> (() => OnlineRefresh.retractPqArtifact(spark, s"$t/ix", noIds)),
+        "compactPqIndex" -> (() => OnlineRefresh.compactPqIndex(spark, s"$t/ix")),
+        "retrainPqIndex" -> (() => OnlineRefresh.retrainPqIndex(spark, s"$t/ix", pqEmb)),
+        "maintainPqIndex" -> (() => OnlineRefresh.maintainPqIndex(spark, s"$t/ix", pqEmb))))
+    }, {
+      val t = tmp("corpus")
+      val schema = stageOps(s"$t/src", Seq(insDf(docs.take(3)), delDf(Seq(2L)),
+        insDf(docs.slice(3, 6)), insDf(docs.drop(6))))
+      run(OnlineRefresh.dedupIngestRetractStream(spark, s"$t/src", schema, s"$t/out",
+        s"$t/ck", maxFilesPerTrigger = Some(1)))
+      ("retract corpus", s"$t/out", () => OnlineRefresh.readRetractedCorpus(spark, s"$t/out")
+        .select("doc_id", "text").collect().map(_.toString).sorted.toSeq, Seq(
+        "compactRetractedCorpus" -> (() => OnlineRefresh.compactRetractedCorpus(spark, s"$t/out"))))
+    }, {
+      val t = tmp("span")
+      val schema = stageOps(s"$t/src", textStages)
+      run(OnlineRefresh.spanBankIngestStream(spark, s"$t/src", schema, s"$t/out",
+        s"$t/ck", width = 3, maxFilesPerTrigger = Some(1)))
+      ("span bank", s"$t/out/bank", () => OnlineRefresh.readSpanBank(spark, s"$t/out")
+        .collect().map(_.toString).sorted.toSeq, Seq(
+        "retractSpanBank" -> (() => OnlineRefresh.retractSpanBank(spark, s"$t/out", noDocs, width = 3)),
+        "compactSpanBank" -> (() => OnlineRefresh.compactSpanBank(spark, s"$t/out"))))
+    }, {
+      val t = tmp("kmv")
+      val schema = stageOps(s"$t/src", textStages.map(_.withColumn("g", lit("all"))))
+      run(OnlineRefresh.buildKmvSketchStream(spark, s"$t/src", schema, s"$t/out",
+        s"$t/ck", "g", "text", maxFilesPerTrigger = Some(1)))
+      ("kmv", s"$t/out", () => graft.ops.Sketches.kmvEstimate(
+          OnlineRefresh.readKmvSketch(spark, s"$t/out", "g"), "g")
+        .collect().map(_.toString).sorted.toSeq, Seq(
+        "compactKmvSketch" -> (() => OnlineRefresh.compactKmvSketch(spark, s"$t/out", "g"))))
+    }, {
+      val t = tmp("quantile")
+      val schema = stageOps(s"$t/src", textStages.map(_.withColumn("g", lit("all"))))
+      run(OnlineRefresh.buildQuantileSketchStream(spark, s"$t/src", schema, s"$t/out",
+        s"$t/ck", "g", "text", "doc_id", maxFilesPerTrigger = Some(1)))
+      ("quantile", s"$t/out", () => graft.ops.Sketches.quantileEstimate(
+          OnlineRefresh.readQuantileSketch(spark, s"$t/out", "g"), "g")
+        .collect().map(_.toString).sorted.toSeq, Seq(
+        "compactQuantileSketch" -> (() => OnlineRefresh.compactQuantileSketch(spark, s"$t/out", "g"))))
+    })
+    for ((family, root, serve, mutators) <- families) {
+      val r = new java.io.File(root)
+      val old = new java.io.File(root + "_old")
+      // the state a kill between swapDir's two renames leaves behind
+      def crash(): Unit = assert(r.renameTo(old) && !r.exists(), s"$family: crash")
+      val before = serve()
+      assert(before.nonEmpty, s"$family: the 4-epoch artifact serves nothing")
+      crash()
+      assert(serve() == before, s"$family: the reader must heal a half-swapped root")
+      for ((name, mutate) <- mutators) {
+        crash()
+        mutate()
+        assert(r.isDirectory && !old.exists(), s"$family: $name left the root unhealed")
+        assert(serve() == before, s"$family: $name moved the served result")
+      }
+    }
+  }
+
+  test("maintainBm25Index rewrites the postings once: tombstones applied and epochs folded in one pass") {
+    import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.QueryExecution
+    val docs = tinyOpCorpus()
+    val tmp = Files.createTempDirectory("graft-bmonce").toString
+    // committed tombstones pending (epoch 1) and 4 epochs past maxEpochs = 2
+    val schema = stageOps(s"$tmp/src", Seq(insDf(docs.take(3)), delDf(Seq(2L)),
+      insDf(docs.slice(3, 6)), insDf(docs.drop(6))))
+    OnlineRefresh.buildBm25IndexRetractStream(spark, s"$tmp/src", schema,
+      s"$tmp/ix", s"$tmp/ck", maxFilesPerTrigger = Some(1)).awaitTermination()
+    object plans extends AdaptiveSparkPlanHelper {
+      def nodes(p: SparkPlan): Seq[SparkPlan] = collectWithSubqueries(p) { case n => n }.flatMap {
+        case c: CommandResultExec => c +: nodes(c.commandPhysicalPlan)
+        case n => Seq(n)
+      }
+    }
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executed.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    var report = Map.empty[String, Double]
+    spark.listenerManager.register(listener)
+    // sparkWork's marker job drains the listener queue the QueryExecution
+    // listener shares
+    try sparkWork {
+      report = OnlineRefresh.maintainBm25Index(spark, s"$tmp/ix", maxEpochs = 2)
+        .as[(String, Double)].collect().toMap
+    } finally spark.listenerManager.unregister(listener)
+    assert(report("tombstones_applied") == 1.0 && report("compacted") == 1.0, s"$report")
+    import scala.jdk.CollectionConverters._
+    val postingsScans = executed.asScala.toSeq.flatMap(plans.nodes).count {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.toString.contains("/postings"))
+      case _ => false
+    }
+    // the attribution rollup, then the folded and the newest epoch's writes
+    assert(postingsScans == 3, s"postings scanned $postingsScans times")
   }
 }
